@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the listener bus drain, which Spark keeps package-private: the
+  * benchmark reads listener-collected metrics only after every event of an
+  * operation has been delivered. */
+object PerfbenchBridge {
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
