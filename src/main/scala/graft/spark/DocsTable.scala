@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic interleaved-document corpus per the engine's input contract:
@@ -59,16 +59,25 @@ object DocsTable {
   }
 
   /** Build the docs DataFrame (distributed generation; nothing collected).
-    * The span generator runs as a Catalyst expression (DocSpansExpr), so
+    * The span generator runs as a kernel call (DocGenKernels.docSpans), so
     * the synthesized corpus — like every kernel in the engine — stays
     * inside whole-stage codegen with no typed-object serialization fence. */
   def docs(spark: SparkSession, nDocs: Long, seed: Long = 42L,
            partitions: Int = 32): DataFrame =
     spark.range(0, nDocs, 1, partitions)
       .select(format_string("doc_%012d", col("id")).as("doc_id"),
-        org.apache.spark.sql.graftbridge.Bridge.column(
-          DocSpansExpr(org.apache.spark.sql.graftbridge.Bridge.expression(col("id")),
-            org.apache.spark.sql.graftbridge.Bridge.expression(lit(seed)))).as("spans"))
+        spans(col("id"), lit(seed)).as("spans"))
+
+  /** doc_id → array<struct<kind, text, media_ref, offset>>: one call into
+    * DocGenKernels.docSpans per row. */
+  private def spans(id: Column, seed: Column): Column = {
+    import org.apache.spark.sql.types._
+    KernelCall.column("docSpans", DocGenKernels, "docSpans",
+      ArrayType(StructType(Seq(
+        StructField("kind", StringType), StructField("text", StringType),
+        StructField("media_ref", StringType), StructField("offset", IntegerType)))),
+      Seq(id, seed), Seq(LongType, LongType), returnNullable = true)
+  }
 
   /** Extract the geo anchor (lon, lat, h, epoch) from the first 'geo' span —
     * a pure column expression, no UDTF (FIXTURES.md geo-anchor convention).
@@ -124,29 +133,4 @@ object DocGenKernels {
     }
     new GenericArrayData(out)
   }
-}
-
-/** doc_id → array<struct<kind, text, media_ref, offset>> — the deterministic
-  * interleaved-span generator as a codegen-able expression. */
-case class DocSpansExpr(id: org.apache.spark.sql.catalyst.expressions.Expression,
-                        seed: org.apache.spark.sql.catalyst.expressions.Expression)
-    extends MediaStaticCall {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.Expression
-  import org.apache.spark.sql.types._
-
-  override def children: Seq[Expression] = Seq(id, seed)
-  override def inputSpec: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("kind", StringType), StructField("text", StringType),
-    StructField("media_ref", StringType), StructField("offset", IntegerType))))
-  override def kernelObject: String = DocGenKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "docSpans"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else DocGenKernels.docSpans(a(0).asInstanceOf[Long], a(1).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
 }

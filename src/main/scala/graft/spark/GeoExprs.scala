@@ -2,9 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -177,319 +175,86 @@ object GeoKernels {
   }
 }
 
-/** Shared base for codegen-able scalar geo expressions: children evaluated,
-  * then one static call into GeoKernels. Declares input types so the
-  * analyzer coerces SQL arguments (e.g. a BIGINT level literal) instead of
-  * crashing codegen / interpreted eval with a ClassCastException. */
-abstract class GeoStaticCall extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  def staticCall: String // e.g. "s2Cell"
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  protected def evalArgs(input: InternalRow): Array[Any] = {
-    val out = new Array[Any](children.length)
-    var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
-      if (v == null) return null
-      out(i) = v
-      i += 1
-    }
-    out
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val codes = children.map(_.genCode(ctx))
-    val kern = GeoKernels.getClass.getName + ".MODULE$"
-    val anyNull = codes.map(_.isNull).mkString(" || ")
-    val args = codes.map(_.value).mkString(", ")
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.javaType(dataType)
-    val childCode = codes.map(_.code).reduce(_ + _)
-    val code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        $javaType ${ev.value} = ${org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.defaultValue(dataType)};
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.$staticCall($args);
-        }
-      """
-    ev.copy(code = code)
-  }
-}
-
-case class S2CellExpr(lon: Expression, lat: Expression, level: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat, level)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = LongType
-  override def staticCall: String = "s2Cell"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.s2Cell(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
-
-case class TileKeyExpr(lon: Expression, lat: Expression, z: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat, z)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = LongType
-  override def staticCall: String = "tileKey"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.tileKey(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
-
-case class UtmZoneExpr(lon: Expression) extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType)
-  override def dataType: DataType = IntegerType
-  override def staticCall: String = "utmZone"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else GeoKernels.utmZone(a(0).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-case class GeodesicDistExpr(lon1: Expression, lat1: Expression,
-                            lon2: Expression, lat2: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon1, lat1, lon2, lat2)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = DoubleType
-  override def staticCall: String = "geodesicDist"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.geodesicDist(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Double], a(3).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2), c(3))
-}
-
-case class S2FaceUvExpr(lon: Expression, lat: Expression) extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("face", IntegerType, nullable = false),
-    StructField("u", DoubleType, nullable = false),
-    StructField("v", DoubleType, nullable = false)))
-  override def staticCall: String = "s2FaceUv"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.s2FaceUv(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
-
-case class RingCellsExpr(lon: Expression, lat: Expression,
-                         level: Expression, rings: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat, level, rings)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def staticCall: String = "ringCells"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.ringCells(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Int], a(3).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2), c(3))
-}
-
-case class GeodesicWaypointsExpr(lon1: Expression, lat1: Expression,
-                                 lon2: Expression, lat2: Expression,
-                                 n: Expression) extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon1, lat1, lon2, lat2, n)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType, DoubleType, IntegerType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def staticCall: String = "geodesicWaypoints"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.geodesicWaypoints(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Double], a(3).asInstanceOf[Double], a(4).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2), c(3), c(4))
-}
-
-case class PolygonMetricsExpr(ring: Expression) extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(ring)
-  override def inputSpec: Seq[DataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("perimeter_m", DoubleType, nullable = false),
-    StructField("area_m2", DoubleType, nullable = false)))
-  override def staticCall: String = "polygonMetrics"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.polygonMetrics(a(0).asInstanceOf[ArrayData])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-case class CoverCellsExpr(ring: Expression, level: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(ring, level)
-  override def inputSpec: Seq[DataType] = Seq(ArrayType(DoubleType), IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def staticCall: String = "coverCells"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.coverCells(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
-
-case class PointInRingExpr(lon: Expression, lat: Expression, ring: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(lon, lat, ring)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, ArrayType(DoubleType))
-  override def dataType: DataType = BooleanType
-  override def staticCall: String = "pointInRing"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.pointInRing(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[ArrayData])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
-
-case class HexBinExpr(x: Expression, y: Expression, size: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(x, y, size)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("q", IntegerType, nullable = false),
-    StructField("r", IntegerType, nullable = false)))
-  override def staticCall: String = "hexBin"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.hexBin(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double],
-      a(2).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
-
-case class HexCenterExpr(q: Expression, r: Expression, size: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(q, r, size)
-  override def inputSpec: Seq[DataType] = Seq(IntegerType, IntegerType, DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("x", DoubleType, nullable = false),
-    StructField("y", DoubleType, nullable = false)))
-  override def staticCall: String = "hexCenter"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.hexCenter(a(0).asInstanceOf[Int], a(1).asInstanceOf[Int],
-      a(2).asInstanceOf[Double])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
-
-case class HexRingExpr(q: Expression, r: Expression, rings: Expression)
-    extends GeoStaticCall {
-  override def children: Seq[Expression] = Seq(q, r, rings)
-  override def inputSpec: Seq[DataType] = Seq(IntegerType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("q", IntegerType, nullable = false),
-    StructField("r", IntegerType, nullable = false))), containsNull = false)
-  override def staticCall: String = "hexRing"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else GeoKernels.hexRing(a(0).asInstanceOf[Int], a(1).asInstanceOf[Int],
-      a(2).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2))
-}
-
-/** Column API for the geo expressions. */
+/** Column API for the geo kernels: each function is one KernelCall into
+  * GeoKernels. */
 object GeoFunctions {
-  import org.apache.spark.sql.graftbridge.Bridge
-  private def col(e: Expression): Column = Bridge.column(e)
-  private def ex(c: Column): Expression = Bridge.expression(c)
+  private def geo(name: String, fn: String, dataType: DataType,
+                  args: Seq[Column], types: DataType*): Column =
+    KernelCall.column(name, GeoKernels, fn, dataType, args, types)
+
+  private def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+  private val cells = ArrayType(LongType, containsNull = false)
+  private val flatRing = ArrayType(DoubleType)
 
   /** S2 cell id at `level` from lon/lat degree columns. */
   def s2Cell(lon: Column, lat: Column, level: Column): Column =
-    col(S2CellExpr(ex(lon), ex(lat), ex(level)))
+    geo("s2Cell", "s2Cell", LongType, Seq(lon, lat, level),
+      DoubleType, DoubleType, IntegerType)
 
   /** packed web-mercator tile key (z | x | y). */
   def tileKey(lon: Column, lat: Column, z: Column): Column =
-    col(TileKeyExpr(ex(lon), ex(lat), ex(z)))
+    geo("tileKey", "tileKey", LongType, Seq(lon, lat, z),
+      DoubleType, DoubleType, IntegerType)
 
   /** UTM zone 1..60 inferred from longitude (reference tmerc.cpp:656-662). */
-  def utmZone(lon: Column): Column = col(UtmZoneExpr(ex(lon)))
+  def utmZone(lon: Column): Column =
+    geo("utmZone", "utmZone", IntegerType, Seq(lon), DoubleType)
 
   /** Karney geodesic distance in metres on WGS84 between two lon/lat pairs. */
   def geodesicDistance(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column =
-    col(GeodesicDistExpr(ex(lon1), ex(lat1), ex(lon2), ex(lat2)))
+    geo("geodesicDistance", "geodesicDist", DoubleType, Seq(lon1, lat1, lon2, lat2),
+      DoubleType, DoubleType, DoubleType, DoubleType)
 
   /** exact even-odd point-in-polygon over a flat [lon,lat,...] ring array. */
   def pointInRing(lon: Column, lat: Column, ring: Column): Column =
-    col(PointInRingExpr(ex(lon), ex(lat), ex(ring)))
+    geo("pointInRing", "pointInRing", BooleanType, Seq(lon, lat, ring),
+      DoubleType, DoubleType, flatRing)
 
   /** S2 face + (u,v) face coordinates: struct(face, u, v). */
   def s2FaceUv(lon: Column, lat: Column): Column =
-    col(S2FaceUvExpr(ex(lon), ex(lat)))
+    geo("s2FaceUv", "s2FaceUv",
+      struct("face" -> IntegerType, "u" -> DoubleType, "v" -> DoubleType),
+      Seq(lon, lat), DoubleType, DoubleType)
 
   /** array of the point's cell and its `rings` neighbor rings at `level`. */
   def ringCells(lon: Column, lat: Column, level: Column, rings: Column): Column =
-    col(RingCellsExpr(ex(lon), ex(lat), ex(level), ex(rings)))
+    geo("ringCells", "ringCells", cells, Seq(lon, lat, level, rings),
+      DoubleType, DoubleType, IntegerType, IntegerType)
 
   /** S2 cover of a flat-ring polygon's bbox at `level` (executor-side). */
   def coverCells(ring: Column, level: Column): Column =
-    col(CoverCellsExpr(ex(ring), ex(level)))
+    geo("coverCells", "coverCells", cells, Seq(ring, level), flatRing, IntegerType)
 
   /** geodesic perimeter + area of a flat [lon,lat,...] ring on WGS84:
     * struct(perimeter_m, area_m2); counter-clockwise area is positive. */
-  def polygonMetrics(ring: Column): Column = col(PolygonMetricsExpr(ex(ring)))
+  def polygonMetrics(ring: Column): Column =
+    geo("polygonMetrics", "polygonMetrics",
+      struct("perimeter_m" -> DoubleType, "area_m2" -> DoubleType), Seq(ring), flatRing)
 
   /** n+1 equally-spaced waypoints along the WGS84 geodesic between two
     * lon/lat points, as a flat [lon,lat,...] array. */
   def geodesicWaypoints(lon1: Column, lat1: Column,
                         lon2: Column, lat2: Column, n: Column): Column =
-    col(GeodesicWaypointsExpr(ex(lon1), ex(lat1), ex(lon2), ex(lat2), ex(n)))
+    geo("geodesicWaypoints", "geodesicWaypoints", ArrayType(DoubleType, containsNull = false),
+      Seq(lon1, lat1, lon2, lat2, n),
+      DoubleType, DoubleType, DoubleType, DoubleType, IntegerType)
 
   /** flat-top axial hex bin of plane (x, y) at `size`: struct(q, r). */
   def hexBin(x: Column, y: Column, size: Column): Column =
-    col(HexBinExpr(ex(x), ex(y), ex(size)))
+    geo("hexBin", "hexBin", struct("q" -> IntegerType, "r" -> IntegerType),
+      Seq(x, y, size), DoubleType, DoubleType, DoubleType)
 
   /** center (x, y) of axial hex (q, r) at `size`: struct(x, y). */
   def hexCenter(q: Column, r: Column, size: Column): Column =
-    col(HexCenterExpr(ex(q), ex(r), ex(size)))
+    geo("hexCenter", "hexCenter", struct("x" -> DoubleType, "y" -> DoubleType),
+      Seq(q, r, size), IntegerType, IntegerType, DoubleType)
 
   /** all hexes within `rings` grid steps of (q, r): array<struct<q, r>>. */
   def hexRing(q: Column, r: Column, rings: Column): Column =
-    col(HexRingExpr(ex(q), ex(r), ex(rings)))
+    geo("hexRing", "hexRing",
+      ArrayType(struct("q" -> IntegerType, "r" -> IntegerType), containsNull = false),
+      Seq(q, r, rings), IntegerType, IntegerType, IntegerType)
 
   /** Global equal-area hex cell: lon/lat → ISEA (icosahedral Snyder
     * equal-area, the published substrate of H3-style grids; gie-verified
@@ -498,6 +263,8 @@ object GeoFunctions {
     * src/projections/isea.cpp:962). `sizeM` is the hex circumradius in
     * ISEA plane metres. */
   def globalHexCell(lon: Column, lat: Column, sizeM: Column): Column = {
+    // the isea transform feeds both x and y; subexpression elimination
+    // evaluates it once per row
     val p = ProjFunctions.projTrans2(lon, lat, "proj=isea ellps=WGS84")
     hexBin(p.getField("x"), p.getField("y"), sizeM)
   }

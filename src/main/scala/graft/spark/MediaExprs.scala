@@ -2,9 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -76,10 +74,12 @@ object MediaKernels {
     }
 
   /** deterministic baseline JPEG for the content-deep check: dimensions
-    * and DC stream derived from the seed (see MediaCodecs). */
-  def encodeJpegForSeed(seed: Long): Array[Byte] =
-    MediaCodecs.encodeJpegBaseline(
-      8 * (1 + (seed % 6)).toInt, 8 * (1 + ((seed * 5) % 6)).toInt, seed)
+    * and DC stream derived from the seed (see MediaCodecs); null when a
+    * negative seed derives an empty or negative dimension. */
+  def encodeJpegForSeed(seed: Long): Array[Byte] = {
+    val w = 8 * (1 + (seed % 6)).toInt; val h = 8 * (1 + ((seed * 5) % 6)).toInt
+    if (w <= 0 || h <= 0) null else MediaCodecs.encodeJpegBaseline(w, h, seed)
+  }
 
   /** full-content JPEG check: Huffman entropy decode + dequant + IDCT,
     * then fold (n_px, px_sum, px_poly); null when the payload doesn't
@@ -99,10 +99,12 @@ object MediaKernels {
     }
 
   /** deterministic progressive (SOF2, §G) JPEG for the content-deep
-    * check: dimensions and coefficient stream derived from the seed. */
-  def encodeJpegProgForSeed(seed: Long): Array[Byte] =
-    MediaCodecs.encodeJpegProgressive(
-      8 * (1 + (seed % 6)).toInt, 8 * (1 + ((seed * 7) % 6)).toInt, seed)
+    * check: dimensions and coefficient stream derived from the seed; null
+    * when a negative seed derives an empty or negative dimension. */
+  def encodeJpegProgForSeed(seed: Long): Array[Byte] = {
+    val w = 8 * (1 + (seed % 6)).toInt; val h = 8 * (1 + ((seed * 7) % 6)).toInt
+    if (w <= 0 || h <= 0) null else MediaCodecs.encodeJpegProgressive(w, h, seed)
+  }
 
   /** full-content progressive-JPEG check: multi-scan coefficient
     * accumulation + IDCT, then fold (n_px, px_sum, px_poly, px_chk) where
@@ -174,16 +176,17 @@ object MediaKernels {
 
   /** content-deep resize check: decode a grayscale JPEG, area-average
     * downscale by `factor`, fold (n_px, px_sum, px_poly) over the resized
-    * plane. Null when the payload doesn't decode to a grayscale plane. */
+    * plane. Null when the payload doesn't decode to a grayscale plane, or
+    * when `factor` is not positive. */
   def jpegResizeStats(payload: Array[Byte], factor: Long): InternalRow = {
+    if (factor <= 0) return null
     val info = MediaCodecs.decodeJpeg(payload) match {
       case Some(i) if i.width > 0 && i.height > 0 => i
       case _ => return null
     }
     MediaCodecs.decodeJpegPixels(payload) match {
       case Some(px) if px.length == info.width * info.height =>
-        val f = factor.toInt
-        val w2 = info.width / f; val h2 = info.height / f
+        val w2 = (info.width / factor).toInt; val h2 = (info.height / factor).toInt
         if (w2 == 0 || h2 == 0) return null
         val r = resizeGray(px, info.width, info.height, w2, h2)
         var sum = 0L; var poly = 0L; var i = 0
@@ -216,275 +219,74 @@ object MediaKernels {
     }
 }
 
-/** Codegen base for the media kernels: like GeoStaticCall, but the static
-  * call returns an OBJECT that is itself null for undecodable payloads —
-  * the generated code re-checks nullness after the call. */
-abstract class MediaStaticCall extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  def staticCall: String
-  /** fully-qualified kernel object the generated code calls into;
-    * subclasses outside the media family override this. */
-  def kernelObject: String = MediaKernels.getClass.getName + ".MODULE$"
-  override def nullable: Boolean = true
-
-  protected def evalArgs(input: InternalRow): Array[Any] = {
-    val out = new Array[Any](children.length)
-    var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
-      if (v == null) return null
-      out(i) = v
-      i += 1
-    }
-    out
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val codes = children.map(_.genCode(ctx))
-    val kern = kernelObject
-    val anyNull = codes.map(_.isNull).mkString(" || ")
-    val args = codes.map(_.value).mkString(", ")
-    val javaType = CodeGenerator.javaType(dataType)
-    val childCode = codes.map(_.code).reduce(_ + _)
-    val code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.$staticCall($args);
-          ${ev.isNull} = ${ev.value} == null;
-        }
-      """
-    ev.copy(code = code)
-  }
-}
-
-/** binary payload synthesized from an integer seed (blob-fetch stand-in). */
-case class MediaEncodeExpr(seed: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(seed)
-  override def inputSpec: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def staticCall: String = "encodeForSeed"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.encodeForSeed(a(0).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** binary payload synthesized from a media_ref string. */
-case class MediaEncodeRefExpr(ref: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(ref)
-  override def inputSpec: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = BinaryType
-  override def staticCall: String = "encodeForRef"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.encodeForRef(a(0).asInstanceOf[UTF8String])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-object MediaInfoExpr {
-  val schema: StructType = StructType(Seq(
-    StructField("kind", StringType),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false)))
-}
-
-/** header decode: binary → struct(kind, width, height, sample_rate,
-  * channels), null when the payload parses as none of PNG/WAV/JPEG. */
-case class MediaInfoExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaInfoExpr.schema
-  override def staticCall: String = "mediaInfo"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.mediaInfo(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** L2-normalized byte-histogram feature vector of a binary payload. */
-case class MediaFeatureExpr(payload: Expression, dim: Expression)
-    extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload, dim)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def staticCall: String = "featurize"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else MediaKernels.featurize(a(0).asInstanceOf[Array[Byte]], a(1).asInstanceOf[Int])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
-
-object MediaStatsSchema {
-  def apply(prefix: String): StructType = StructType(Seq(
-    StructField(s"n_$prefix", LongType, nullable = false),
-    StructField(s"${prefix}_sum", LongType, nullable = false),
-    StructField(s"${prefix}_poly", LongType, nullable = false)))
-}
-
-/** content-deep PNG stats: inflate + un-filter, fold (n_px, px_sum,
-  * px_poly) over every recovered pixel byte. */
-case class PngPixelStatsExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaStatsSchema("px")
-  override def staticCall: String = "pngPixelStats"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.pngPixelStats(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** content-deep WAV stats: data-chunk walk + LE int16 decode, fold
-  * (n_smp, smp_sum, smp_poly) over every sample. */
-case class WavSampleStatsExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = MediaStatsSchema("smp")
-  override def staticCall: String = "wavSampleStats"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.wavSampleStats(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** deterministic baseline JPEG payload from a seed */
-case class MediaEncodeJpegExpr(seed: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(seed)
-  override def inputSpec: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def staticCall: String = "encodeJpegForSeed"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.encodeJpegForSeed(a(0).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** content-deep JPEG stats: entropy decode + IDCT, fold (n, sum, poly) */
-case class JpegPixelStatsExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_px", LongType), StructField("px_sum", LongType),
-    StructField("px_poly", LongType)))
-  override def staticCall: String = "jpegPixelStats"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.jpegPixelStats(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-case class MediaEncodeJpegProgExpr(seed: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(seed)
-  override def inputSpec: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def staticCall: String = "encodeJpegProgForSeed"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.encodeJpegProgForSeed(a(0).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** content-deep progressive-JPEG stats: multi-scan §G decode + IDCT, fold
-  * (n, sum, poly, chk) — chk uses a quadratic in-block weight that sees
-  * the AC coefficients. */
-case class JpegPixelStatsProgExpr(payload: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_px", LongType), StructField("px_sum", LongType),
-    StructField("px_poly", LongType), StructField("px_chk", LongType)))
-  override def staticCall: String = "jpegPixelStatsProg"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else MediaKernels.jpegPixelStatsProg(a(0).asInstanceOf[Array[Byte]])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** content-deep resize stats: decode + area-average downscale + fold */
-case class JpegResizeStatsExpr(payload: Expression, factor: Expression)
-    extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(payload, factor)
-  override def inputSpec: Seq[DataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_px", LongType), StructField("px_sum", LongType),
-    StructField("px_poly", LongType)))
-  override def staticCall: String = "jpegResizeStats"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else MediaKernels.jpegResizeStats(a(0).asInstanceOf[Array[Byte]],
-      a(1).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
-
-/** Column API for the media expressions. */
+/** Column API for the media kernels: each function is one KernelCall into
+  * MediaKernels. Every result is nullable: a kernel returns null for a
+  * payload it cannot decode. */
 object MediaFunctions {
-  import org.apache.spark.sql.graftbridge.Bridge
-  private def col(e: Expression): Column = Bridge.column(e)
-  private def ex(c: Column): Expression = Bridge.expression(c)
+  private def media(name: String, fn: String, dataType: DataType, args: Seq[Column],
+                    types: DataType*): Column =
+    KernelCall.column(name, MediaKernels, fn, dataType, args, types, returnNullable = true)
+
+  private def stats(nullable: Boolean, fields: String*): StructType =
+    StructType(fields.map(StructField(_, LongType, nullable)))
+  private val jpegStats = stats(nullable = true, "n_px", "px_sum", "px_poly")
 
   /** synthesized payload bytes from an integer seed. */
-  def mediaEncode(seed: Column): Column = col(MediaEncodeExpr(ex(seed)))
+  def mediaEncode(seed: Column): Column =
+    media("mediaEncode", "encodeForSeed", BinaryType, Seq(seed), LongType)
 
   /** synthesized payload bytes from a media_ref string. */
-  def mediaEncodeRef(ref: Column): Column = col(MediaEncodeRefExpr(ex(ref)))
+  def mediaEncodeRef(ref: Column): Column =
+    media("mediaEncodeRef", "encodeForRef", BinaryType, Seq(ref), StringType)
 
-  /** header decode struct (kind, width, height, sample_rate, channels). */
-  def mediaInfo(payload: Column): Column = col(MediaInfoExpr(ex(payload)))
+  /** header decode struct (kind, width, height, sample_rate, channels);
+    * null when the payload parses as none of PNG/WAV/JPEG. */
+  def mediaInfo(payload: Column): Column =
+    media("mediaInfo", "mediaInfo", StructType(Seq(
+      StructField("kind", StringType),
+      StructField("width", IntegerType, nullable = false),
+      StructField("height", IntegerType, nullable = false),
+      StructField("sample_rate", IntegerType, nullable = false),
+      StructField("channels", IntegerType, nullable = false))), Seq(payload), BinaryType)
 
   /** L2-normalized byte-histogram feature vector. */
   def mediaFeature(payload: Column, dim: Column): Column =
-    col(MediaFeatureExpr(ex(payload), ex(dim)))
+    media("mediaFeature", "featurize", ArrayType(FloatType, containsNull = false),
+      Seq(payload, dim), BinaryType, IntegerType)
 
-  /** PNG content stats struct (n_px, px_sum, px_poly). */
-  def pngPixelStats(payload: Column): Column = col(PngPixelStatsExpr(ex(payload)))
+  /** PNG content stats struct (n_px, px_sum, px_poly): inflate + un-filter,
+    * folded over every recovered pixel byte. */
+  def pngPixelStats(payload: Column): Column =
+    media("pngPixelStats", "pngPixelStats",
+      stats(nullable = false, "n_px", "px_sum", "px_poly"), Seq(payload), BinaryType)
 
   /** deterministic baseline JPEG payload from an integer seed. */
-  def mediaEncodeJpeg(seed: Column): Column = col(MediaEncodeJpegExpr(ex(seed)))
+  def mediaEncodeJpeg(seed: Column): Column =
+    media("mediaEncodeJpeg", "encodeJpegForSeed", BinaryType, Seq(seed), LongType)
 
-  /** JPEG content stats struct (n_px, px_sum, px_poly). */
-  def jpegPixelStats(payload: Column): Column = col(JpegPixelStatsExpr(ex(payload)))
+  /** JPEG content stats struct (n_px, px_sum, px_poly): entropy decode +
+    * IDCT, folded over every pixel. */
+  def jpegPixelStats(payload: Column): Column =
+    media("jpegPixelStats", "jpegPixelStats", jpegStats, Seq(payload), BinaryType)
 
   /** resized-plane content stats (area-average downscale by factor). */
   def jpegResizeStats(payload: Column, factor: Column): Column =
-    col(JpegResizeStatsExpr(ex(payload), ex(factor)))
+    media("jpegResizeStats", "jpegResizeStats", jpegStats, Seq(payload, factor),
+      BinaryType, LongType)
 
   /** deterministic progressive (SOF2) JPEG payload from an integer seed. */
   def mediaEncodeJpegProg(seed: Column): Column =
-    col(MediaEncodeJpegProgExpr(ex(seed)))
+    media("mediaEncodeJpegProg", "encodeJpegProgForSeed", BinaryType, Seq(seed), LongType)
 
-  /** progressive-JPEG content stats struct (n_px, px_sum, px_poly, px_chk). */
+  /** progressive-JPEG content stats struct (n_px, px_sum, px_poly, px_chk):
+    * px_chk uses a quadratic in-block weight that sees the AC coefficients. */
   def jpegPixelStatsProg(payload: Column): Column =
-    col(JpegPixelStatsProgExpr(ex(payload)))
+    media("jpegPixelStatsProg", "jpegPixelStatsProg",
+      stats(nullable = true, "n_px", "px_sum", "px_poly", "px_chk"), Seq(payload), BinaryType)
 
-  /** WAV content stats struct (n_smp, smp_sum, smp_poly). */
-  def wavSampleStats(payload: Column): Column = col(WavSampleStatsExpr(ex(payload)))
+  /** WAV content stats struct (n_smp, smp_sum, smp_poly): data-chunk walk +
+    * LE int16 decode, folded over every sample. */
+  def wavSampleStats(payload: Column): Column =
+    media("wavSampleStats", "wavSampleStats",
+      stats(nullable = false, "n_smp", "smp_sum", "smp_poly"), Seq(payload), BinaryType)
 }

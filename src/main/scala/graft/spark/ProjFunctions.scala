@@ -2,9 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Literal, SpecificInternalRow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions.lit
 
@@ -15,9 +13,10 @@ import graft.proj.{Dispatch, PJ, Proj}
   * crosses the wire; the PJ (plan-time constants + kernels) is rebuilt once
   * per executor JVM and cached. Transform calls allocate a per-row Coord on
   * the stack side, so a shared pipeline is safe under the 32-thread local
-  * executor.
+  * executor. Equal by proj string, so identical transforms are equal
+  * expressions.
   */
-final class ProjPipeline(val projString: String) extends Serializable {
+final case class ProjPipeline(projString: String) {
   @transient private lazy val pj: PJ = ProjPipeline.cached(projString)
 
   /** In-place 4D transform; returns err (0 = ok), with HUGE_VAL poisoning
@@ -59,20 +58,22 @@ object ProjKernels {
 
   def resultType: StructType = outType
 
-  /** per-thread, per-EXPRESSION scratch: the dominant transform path
+  /** per-thread, per-COLUMN scratch: the dominant transform path
     * allocates nothing per row — a typed SpecificInternalRow avoids even
-    * the Double boxing an Array[Any]-backed row would pay. The scratch is
-    * owned by the expression instance (not this object): two transform
-    * columns in one projection must not alias one row (consumers that
-    * buffer the struct copy it — Spark's own UnsafeProjection reuse
-    * contract covers the per-row reuse). */
+    * the Double boxing an Array[Any]-backed row would pay. Each column gets
+    * its own handle (not this object): two transform columns in one
+    * projection must not alias one row (consumers that buffer the struct
+    * copy it — Spark's own UnsafeProjection reuse contract covers the
+    * per-row reuse). */
   final class Scratch {
     val c = new Coord
     val row = new SpecificInternalRow(outType.map(_.dataType))
   }
   /** serialization-friendly handle: ships with the plan, rebuilds its
-    * per-thread scratch lazily in each JVM */
-  final class ScratchRef extends Serializable {
+    * per-thread scratch lazily in each JVM. All handles compare equal —
+    * which row a column writes is not part of its meaning — so identical
+    * transforms stay equal expressions; each handle still owns its rows. */
+  final case class ScratchRef() {
     @transient lazy val tl: ThreadLocal[Scratch] =
       ThreadLocal.withInitial[Scratch](() => new Scratch)
   }
@@ -116,7 +117,8 @@ object FactorsKernels {
     val row = new SpecificInternalRow(outType.map(_.dataType))
     val m = new graft.proj.Factors.ProjFactorsM
   }
-  final class ScratchRef extends Serializable {
+  /** equal to every other handle, like ProjKernels.ScratchRef */
+  final case class ScratchRef() {
     @transient lazy val tl: ThreadLocal[Scratch] =
       ThreadLocal.withInitial[Scratch](() => new Scratch)
   }
@@ -154,7 +156,8 @@ object TransBoundsKernels {
 
   def resultType: StructType = outType
 
-  final class ScratchRef extends Serializable {
+  /** equal to every other handle, like ProjKernels.ScratchRef */
+  final case class ScratchRef() {
     @transient lazy val tl: ThreadLocal[SpecificInternalRow] =
       ThreadLocal.withInitial[SpecificInternalRow](
         () => new SpecificInternalRow(outType.map(_.dataType)))
@@ -179,57 +182,6 @@ object TransBoundsKernels {
   }
 }
 
-case class TransBoundsExpr(lonMin: Expression, latMin: Expression,
-                           lonMax: Expression, latMax: Expression,
-                           projString: String) extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  @transient private lazy val pipeline = new ProjPipeline(projString)
-  @transient private lazy val scratch = new TransBoundsKernels.ScratchRef
-
-  override def children: Seq[Expression] = Seq(lonMin, latMin, lonMax, latMax)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = TransBoundsKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else TransBoundsKernels.eval(pipeline, vs(0).asInstanceOf[Double],
-      vs(1).asInstanceOf[Double], vs(2).asInstanceOf[Double],
-      vs(3).asInstanceOf[Double], scratch)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pipeRef = ctx.addReferenceObj("projPipeline", pipeline, classOf[ProjPipeline].getName)
-    val scrRef = ctx.addReferenceObj("tbScratch", scratch,
-      classOf[TransBoundsKernels.ScratchRef].getName)
-    val cs = children.map(_.genCode(ctx))
-    val kern = TransBoundsKernels.getClass.getName + ".MODULE$"
-    val anyNull = cs.map(_.isNull).mkString(" || ")
-    val childCode = cs.map(_.code).reduce(_ + _)
-    val code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($pipeRef, ${cs(0).value}, ${cs(1).value},
-            ${cs(2).value}, ${cs(3).value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1), c(2), c(3))
-}
-
-/** Per-row UTM zone dispatch: 120 precompiled pipelines (zone 1..60 ×
-  * north/south), selected per row from the point's inferred zone — the
-  * north-star "per-row zone inference for scattered points" wired all the
-  * way to the transform (reference zone logic src/projections/tmerc.cpp:
-  * 630-672). Pipelines are plan-time constants; PJs build lazily once per
-  * executor JVM via the ProjPipeline cache. */
 /** Per-row coordinate-operation dispatch — the reference's per-point
   * alternative-operation selection (src/trans.cpp pj_get_suggested_operation)
   * compiled into a column expression. Candidates are planned ONCE on the
@@ -238,8 +190,7 @@ case class TransBoundsExpr(lonMin: Expression, latMin: Expression,
   * of use contains the point (smaller area breaking ties), falling back to
   * the first candidate when no extent matches (the gridless-fallback rule).
   * Only plain data ships to executors; pipelines compile lazily per JVM. */
-final class RegistryDispatch(val srcSpec: String, val dstSpec: String)
-    extends Serializable {
+final case class RegistryDispatch(srcSpec: String, dstSpec: String) {
   import graft.proj.OpRuntime.CandMeta
 
   val (pipeStrs: Array[String], metas: Array[CandMeta],
@@ -350,7 +301,8 @@ object RegistryDispatchKernels {
     val saved = new Coord
     val row = new SpecificInternalRow(outType.map(_.dataType))
   }
-  final class ScratchRef extends Serializable {
+  /** equal to every other handle, like ProjKernels.ScratchRef */
+  final case class ScratchRef() {
     @transient lazy val tl: ThreadLocal[Scratch] =
       ThreadLocal.withInitial[Scratch](() => new Scratch)
   }
@@ -394,52 +346,13 @@ object RegistryDispatchKernels {
   }
 }
 
-/** Catalyst expression: per-row registry dispatch (x, y in the source CRS's
-  * GIS units) -> struct(op, x, y, z). */
-case class CrsDispatchExpr(xExpr: Expression, yExpr: Expression,
-                           srcSpec: String, dstSpec: String) extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  @transient private lazy val dispatch = new RegistryDispatch(srcSpec, dstSpec)
-  @transient private lazy val scratch = new RegistryDispatchKernels.ScratchRef
-
-  override def children: Seq[Expression] = Seq(xExpr, yExpr)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = RegistryDispatchKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val x = xExpr.eval(input); val y = yExpr.eval(input)
-    if (x == null || y == null) null
-    else RegistryDispatchKernels.eval(dispatch,
-      x.asInstanceOf[Double], y.asInstanceOf[Double], scratch)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // force driver-side planning so executors deserialize plain data
-    val dRef = ctx.addReferenceObj("crsDispatch", dispatch,
-      classOf[RegistryDispatch].getName)
-    val scrRef = ctx.addReferenceObj("dispScratch", scratch,
-      classOf[RegistryDispatchKernels.ScratchRef].getName)
-    val xC = xExpr.genCode(ctx); val yC = yExpr.genCode(ctx)
-    val kern = RegistryDispatchKernels.getClass.getName + ".MODULE$"
-    val code =
-      code"""
-        ${xC.code}
-        ${yC.code}
-        boolean ${ev.isNull} = ${xC.isNull} || ${yC.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($dRef, ${xC.value}, ${yC.value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(xExpr = newChildren(0), yExpr = newChildren(1))
-}
-
-final class UtmDispatch(val ellps: String) extends Serializable {
+/** Per-row UTM zone dispatch: 120 precompiled pipelines (zone 1..60 ×
+  * north/south), selected per row from the point's inferred zone — the
+  * north-star "per-row zone inference for scattered points" wired all the
+  * way to the transform (reference zone logic src/projections/tmerc.cpp:
+  * 630-672). Pipelines are plan-time constants; PJs build lazily once per
+  * executor JVM via the ProjPipeline cache. */
+final case class UtmDispatch(ellps: String) {
   @transient private lazy val pipes: Array[ProjPipeline] = {
     val arr = new Array[ProjPipeline](120)
     var z = 1
@@ -467,7 +380,8 @@ object UtmNativeKernels {
     val c = new Coord
     val row = new SpecificInternalRow(outType.map(_.dataType))
   }
-  final class ScratchRef extends Serializable {
+  /** equal to every other handle, like ProjKernels.ScratchRef */
+  final case class ScratchRef() {
     @transient lazy val tl: ThreadLocal[Scratch] =
       ThreadLocal.withInitial[Scratch](() => new Scratch)
   }
@@ -487,169 +401,32 @@ object UtmNativeKernels {
   }
 }
 
-/** Catalyst expression: (lonDeg, latDeg) -> struct(zone, south, x, y) in the
-  * point's own inferred UTM zone CRS. */
-case class UtmNativeExpr(lonExpr: Expression, latExpr: Expression,
-                         ellps: String) extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  @transient private lazy val dispatch = new UtmDispatch(ellps)
-  @transient private lazy val scratch = new UtmNativeKernels.ScratchRef
-
-  override def children: Seq[Expression] = Seq(lonExpr, latExpr)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = UtmNativeKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val lon = lonExpr.eval(input); val lat = latExpr.eval(input)
-    if (lon == null || lat == null) null
-    else UtmNativeKernels.eval(dispatch, lon.asInstanceOf[Double],
-      lat.asInstanceOf[Double], scratch)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dRef = ctx.addReferenceObj("utmDispatch", dispatch, classOf[UtmDispatch].getName)
-    val scrRef = ctx.addReferenceObj("utmScratch", scratch,
-      classOf[UtmNativeKernels.ScratchRef].getName)
-    val lonC = lonExpr.genCode(ctx); val latC = latExpr.genCode(ctx)
-    val kern = UtmNativeKernels.getClass.getName + ".MODULE$"
-    val code =
-      code"""
-        ${lonC.code}
-        ${latC.code}
-        boolean ${ev.isNull} = ${lonC.isNull} || ${latC.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($dRef, ${lonC.value}, ${latC.value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(lonExpr = newChildren(0), latExpr = newChildren(1))
-}
-
-/** Catalyst expression: (lonDeg, latDeg) -> struct(h,k,s,omega,conv). */
-case class ProjFactorsExpr(lonExpr: Expression, latExpr: Expression,
-                           projString: String) extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-  @transient private lazy val pipeline = new ProjPipeline(projString)
-  @transient private lazy val scratch = new FactorsKernels.ScratchRef
-
-  override def children: Seq[Expression] = Seq(lonExpr, latExpr)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = FactorsKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val lon = lonExpr.eval(input); val lat = latExpr.eval(input)
-    if (lon == null || lat == null) null
-    else FactorsKernels.eval(pipeline, lon.asInstanceOf[Double],
-      lat.asInstanceOf[Double], scratch)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pipeRef = ctx.addReferenceObj("projPipeline", pipeline,
-      classOf[ProjPipeline].getName)
-    val scrRef = ctx.addReferenceObj("facScratch", scratch,
-      classOf[FactorsKernels.ScratchRef].getName)
-    val lonC = lonExpr.genCode(ctx); val latC = latExpr.genCode(ctx)
-    val kern = FactorsKernels.getClass.getName + ".MODULE$"
-    val code =
-      code"""
-        ${lonC.code}
-        ${latC.code}
-        boolean ${ev.isNull} = ${lonC.isNull} || ${latC.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($pipeRef, ${lonC.value}, ${latC.value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(lonExpr = newChildren(0), latExpr = newChildren(1))
-}
-
-/** Catalyst expression: (x, y, z, t) --proj pipeline--> struct(x,y,z,t,err).
-  *
-  * Codegen-friendly: emits a single static call into ProjKernels with the
-  * pipeline attached via addReferenceObj, so it participates in whole-stage
-  * codegen (same shape as Spark's own Invoke-based expressions).
-  */
-case class ProjTransformExpr(
-    xExpr: Expression, yExpr: Expression, zExpr: Expression, tExpr: Expression,
-    projString: String, forward: Boolean, degIO: Boolean)
-    extends Expression
-    with org.apache.spark.sql.graftbridge.PublicInputTypes {
-
-  @transient private lazy val pipeline = new ProjPipeline(projString)
-  @transient private lazy val scratch = new ProjKernels.ScratchRef
-
-  override def children: Seq[Expression] = Seq(xExpr, yExpr, zExpr, tExpr)
-  override def inputSpec: Seq[DataType] = Seq(DoubleType, DoubleType, DoubleType, DoubleType)
-  override def dataType: DataType = ProjKernels.resultType
-  override def nullable: Boolean = children.exists(_.nullable)
-
-  override def eval(input: InternalRow): Any = {
-    val x = xExpr.eval(input); val y = yExpr.eval(input)
-    val z = zExpr.eval(input); val t = tExpr.eval(input)
-    if (x == null || y == null || z == null || t == null) null
-    else ProjKernels.eval(pipeline, forward, degIO,
-      x.asInstanceOf[Double], y.asInstanceOf[Double],
-      z.asInstanceOf[Double], t.asInstanceOf[Double], scratch)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pipeRef = ctx.addReferenceObj("projPipeline", pipeline,
-      classOf[ProjPipeline].getName)
-    val scrRef = ctx.addReferenceObj("projScratch", scratch,
-      classOf[ProjKernels.ScratchRef].getName)
-    val xC = xExpr.genCode(ctx); val yC = yExpr.genCode(ctx)
-    val zC = zExpr.genCode(ctx); val tC = tExpr.genCode(ctx)
-    val kern = ProjKernels.getClass.getName + ".MODULE$"
-    val code =
-      code"""
-        ${xC.code}
-        ${yC.code}
-        ${zC.code}
-        ${tC.code}
-        boolean ${ev.isNull} = ${xC.isNull} || ${yC.isNull} || ${zC.isNull} || ${tC.isNull};
-        InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kern.eval($pipeRef, $forward, $degIO,
-            ${xC.value}, ${yC.value}, ${zC.value}, ${tC.value}, $scrRef);
-        }
-      """
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(xExpr = newChildren(0), yExpr = newChildren(1),
-      zExpr = newChildren(2), tExpr = newChildren(3))
-}
-
 /** Column-level API of the engine. */
 object ProjFunctions {
-  import org.apache.spark.sql.catalyst.expressions.{Expression => CExpr}
+  import KernelCall.obj
 
-  private def col(e: CExpr): Column = org.apache.spark.sql.graftbridge.Bridge.column(e)
-  private def expr(c: Column): CExpr = org.apache.spark.sql.graftbridge.Bridge.expression(c)
+  /** One KernelCall into `kernels.eval(head ++ coords :+ scratch)`: the
+    * coordinates are doubles, `head` carries the plan-time pipeline or
+    * dispatch table, and `scratch` is this column's own result row. */
+  private def kernel(name: String, kernels: AnyRef, dataType: DataType,
+                     coords: Seq[Column], head: Seq[Literal], scratch: AnyRef): Column =
+    KernelCall.column(name, kernels, "eval", dataType, coords, coords.map(_ => DoubleType),
+      before = head, after = Seq(obj(scratch)))
 
   /** Cartographic distortion factors (meridional/parallel/areal scale,
     * angular distortion, convergence) of a projection at lon/lat degrees. */
   def projFactors(lon: Column, lat: Column, pipeline: String): Column =
-    col(ProjFactorsExpr(expr(lon), expr(lat), pipeline))
+    kernel("projFactors", FactorsKernels, FactorsKernels.resultType, Seq(lon, lat),
+      Seq(obj(ProjPipeline(pipeline))), FactorsKernels.ScratchRef())
 
   /** Full 4D pipeline transform. Angular IO is exposed in degrees when
     * degIO = true (the natural fit for lon/lat columns). */
   def projTrans(x: Column, y: Column, z: Column, t: Column,
                 pipeline: String, forward: Boolean = true,
                 degIO: Boolean = true): Column =
-    col(ProjTransformExpr(expr(x), expr(y), expr(z), expr(t),
-      pipeline, forward, degIO))
+    kernel("projTrans", ProjKernels, ProjKernels.resultType, Seq(x, y, z, t),
+      Seq(obj(ProjPipeline(pipeline)), Literal(forward), Literal(degIO)),
+      ProjKernels.ScratchRef())
 
   /** 2D convenience: lon/lat in degrees -> struct(x, y, z, t, err). */
   def projTrans2(lon: Column, lat: Column, pipeline: String): Column =
@@ -676,7 +453,8 @@ object ProjFunctions {
     * the reference's per-point proj_trans selection as a codegen'd
     * expression. struct(op, x, y, z). */
   def crsToCrsDispatch(x: Column, y: Column, srcCrs: String, dstCrs: String): Column =
-    col(CrsDispatchExpr(expr(x), expr(y), srcCrs, dstCrs))
+    kernel("crsToCrsDispatch", RegistryDispatchKernels, RegistryDispatchKernels.resultType,
+      Seq(x, y), Seq(obj(RegistryDispatch(srcCrs, dstCrs))), RegistryDispatchKernels.ScratchRef())
 
   /** Registry-grade CRS→CRS: the best-accuracy instantiable coordinate
     * operation from the EPSG/IGNF operation database
@@ -690,11 +468,14 @@ object ProjFunctions {
   /** Reproject a point into its own inferred UTM zone CRS (per-row zone
     * dispatch over 120 precompiled pipelines): struct(zone, south, x, y). */
   def utmNative(lon: Column, lat: Column, ellps: String = "WGS84"): Column =
-    col(UtmNativeExpr(expr(lon), expr(lat), ellps))
+    kernel("utmNative", UtmNativeKernels, UtmNativeKernels.resultType, Seq(lon, lat),
+      Seq(obj(UtmDispatch(ellps))), UtmNativeKernels.ScratchRef())
 
   /** proj_trans_bounds: lon/lat degree extent -> target-CRS envelope
     * struct(xmin, ymin, xmax, ymax), densified-edge semantics. */
   def projTransBounds(lonMin: Column, latMin: Column,
                       lonMax: Column, latMax: Column, pipeline: String): Column =
-    col(TransBoundsExpr(expr(lonMin), expr(latMin), expr(lonMax), expr(latMax), pipeline))
+    kernel("projTransBounds", TransBoundsKernels, TransBoundsKernels.resultType,
+      Seq(lonMin, latMin, lonMax, latMax), Seq(obj(ProjPipeline(pipeline))),
+      TransBoundsKernels.ScratchRef())
 }

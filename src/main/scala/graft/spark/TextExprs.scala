@@ -2,7 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -153,93 +153,34 @@ object TextKernels {
   }
 }
 
-/** 64-bit SimHash of a words array (one pass, xxhash64 seed 42 per word). */
-case class SimHash64Expr(words: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(words)
-  override def inputSpec: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = words.nullable
-  override def kernelObject: String = TextKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "simhash64"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null else TextKernels.simhash64(a(0).asInstanceOf[ArrayData])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** 16-bit shared (md5-derived) SimHash bucket of a words array. */
-case class SimHashSharedExpr(words: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(words)
-  override def inputSpec: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = words.nullable
-  override def kernelObject: String = TextKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "simhashBucketShared"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else TextKernels.simhashBucketShared(a(0).asInstanceOf[ArrayData])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-object LangScoresExpr {
-  val schema: StructType = StructType(
-    TextKernels.langProfiles.map(p =>
-      StructField(p._1, IntegerType, nullable = false)) :+
-      StructField("pred", StringType, nullable = false))
-}
-
-/** trigram-profile language scores + argmax prediction in one text scan;
-  * input must already be " " + lower(text) + " " (prepared Spark-side so
-  * the kernel stays a pure byte scan). */
-case class LangScoresExpr(prepared: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(prepared)
-  override def inputSpec: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = LangScoresExpr.schema
-  override def nullable: Boolean = prepared.nullable
-  override def kernelObject: String = TextKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "langScores"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else TextKernels.langScores(a(0).asInstanceOf[UTF8String])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0))
-}
-
-/** Column API for the single-pass text expressions. */
-/** seeded sampling hash in [0, m): Java two's-complement LCG wrap +
-  * sign-safe mod — ANSI-mode Column arithmetic would raise on the
-  * intentional overflow, so the wrap lives in a codegen'd kernel. */
-case class SampleHashExpr(key: Expression, m: Expression) extends MediaStaticCall {
-  override def children: Seq[Expression] = Seq(key, m)
-  override def inputSpec: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = key.nullable || m.nullable
-  override def kernelObject: String = TextKernels.getClass.getName + ".MODULE$"
-  override def staticCall: String = "sampleHash"
-  override def eval(input: InternalRow): Any = {
-    val a = evalArgs(input)
-    if (a == null) null
-    else TextKernels.sampleHash(a(0).asInstanceOf[Long], a(1).asInstanceOf[Long])
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(c(0), c(1))
-}
-
+/** Column API for the single-pass text kernels: each function is one
+  * KernelCall into TextKernels. */
 object TextFunctions {
-  import org.apache.spark.sql.graftbridge.Bridge
-  private def col(e: Expression): Column = Bridge.column(e)
-  private def ex(c: Column): Expression = Bridge.expression(c)
+  private def text(name: String, dataType: DataType, args: Seq[Column],
+                   types: DataType*): Column =
+    KernelCall.column(name, TextKernels, name, dataType, args, types)
 
-  def simhash64(words: Column): Column = col(SimHash64Expr(ex(words)))
+  /** 64-bit SimHash of a words array (one pass, xxhash64 seed 42 per word). */
+  def simhash64(words: Column): Column =
+    text("simhash64", LongType, Seq(words), ArrayType(StringType))
+
+  /** seeded sampling hash in [0, m): Java two's-complement LCG wrap +
+    * sign-safe mod — ANSI-mode Column arithmetic would raise on the
+    * intentional overflow, so the wrap lives in a kernel. */
   def sampleHash(key: Column, m: Column): Column =
-    col(SampleHashExpr(ex(key), ex(m)))
-  def simhashBucketShared(words: Column): Column = col(SimHashSharedExpr(ex(words)))
-  def langScores(prepared: Column): Column = col(LangScoresExpr(ex(prepared)))
+    text("sampleHash", LongType, Seq(key, m), LongType, LongType)
+
+  /** 16-bit shared (md5-derived) SimHash bucket of a words array. */
+  def simhashBucketShared(words: Column): Column =
+    text("simhashBucketShared", LongType, Seq(words), ArrayType(StringType))
+
+  /** trigram-profile language scores + argmax prediction in one text scan:
+    * struct(en, es, fr, de, pred). The input must already be
+    * " " + lower(text) + " " (prepared Spark-side so the kernel stays a
+    * pure byte scan). */
+  def langScores(prepared: Column): Column =
+    text("langScores", StructType(
+      TextKernels.langProfiles.map(p => StructField(p._1, IntegerType, nullable = false)) :+
+        StructField("pred", StringType, nullable = false)),
+      Seq(prepared), StringType)
 }

@@ -113,7 +113,7 @@ object TrainingOps {
 
   /** n-gram-frequency language id heuristic: scores per language from
     * characteristic trigram hit counts. One single-pass expression
-    * (LangScoresExpr) scans the text once for all 26 patterns — the
+    * (TextFunctions.langScores) scans the text once for all 26 patterns — the
     * column-formula version ran one regexp_replace per trigram (26 scans
     * per row); outputs locked equal in TextExprsSpec. */
   def withLangId(docs: DataFrame, textCol: String = "text"): DataFrame =

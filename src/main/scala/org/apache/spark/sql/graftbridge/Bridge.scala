@@ -2,25 +2,15 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Tiny bridge into the private[sql] Column <-> catalyst Expression
   * converters (Spark 4 moved Column onto ColumnNode; third-party
   * expression libraries reach the classic path through a same-package
-  * shim like this). */
+  * shim like this). `expression` converts the whole column tree now, so
+  * an expression built from columns holds plain Catalyst nodes, also in
+  * the places that are not its children. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
-  def expression(c: Column): Expression = ExpressionUtils.expression(c)
-}
-
-/** ImplicitCastInputTypes with a PUBLIC-types spec: AbstractDataType is
-  * private[sql], so third-party expressions declare `inputSpec` in plain
-  * DataType terms and this same-package trait adapts it — giving graft's
-  * SQL-registered expressions analyzer-driven argument coercion (BIGINT
-  * levels, integer lon/lat literals, ...). */
-trait PublicInputTypes
-    extends org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  /** expected child types, in order (public DataType only). */
-  def inputSpec: Seq[org.apache.spark.sql.types.DataType]
-  override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] = inputSpec
+  def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 }

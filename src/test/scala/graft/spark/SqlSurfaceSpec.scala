@@ -45,7 +45,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("integer SQL arguments coerce instead of crashing the proj kernels") {
-    // regression: ProjTransformExpr & friends declare input types, so
+    // regression: the kernel calls declare input types, so
     // INT/BIGINT literals (the natural thing to type in SQL) are cast
     val r = spark.sql(
       """SELECT graft_global_hex(139, 35, 100000) AS h,

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Locks the single-pass text expressions (SimHash64Expr,
-  * SimHashSharedExpr, LangScoresExpr) bit-for-bit against the multi-scan
+/** Locks the single-pass text kernels (TextKernels.simhash64,
+  * simhashBucketShared, langScores) bit-for-bit against the multi-scan
   * column formulas they replaced — the formulas are reproduced here
   * verbatim as the reference implementation. */
 class TextExprsSpec extends AnyFunSuite {
