@@ -79,19 +79,42 @@ object DocsTable {
       Seq(id, seed), Seq(LongType, LongType), returnNullable = true)
   }
 
-  /** Extract the geo anchor (lon, lat, h, epoch) from the first 'geo' span —
-    * a pure column expression, no UDTF (FIXTURES.md geo-anchor convention).
-    * Null lon/lat for docs without a geo span. */
+  /** Extract the geo anchor (lon, lat, h, epoch) from the first 'geo' span
+    * — one call into AnchorKernels.anchor per row, inside whole-stage
+    * codegen (FIXTURES.md geo-anchor convention). Null lon/lat for docs
+    * without a geo span; a malformed token gives a null field. */
   def withAnchor(docs: DataFrame): DataFrame = {
-    val geoText = try_element_at(
-      filter(col("spans"), s => s.getField("kind") === "geo"), lit(1))
-      .getField("text")
-    val parts = split(geoText, " ")
+    val a = anchor(docs)
     docs
-      .withColumn("lon", try_element_at(parts, lit(1)).cast("double"))
-      .withColumn("lat", try_element_at(parts, lit(2)).cast("double"))
-      .withColumn("anchor_h", try_element_at(parts, lit(3)).cast("double"))
-      .withColumn("anchor_epoch", try_element_at(parts, lit(4)).cast("double"))
+      .withColumn("lon", a.getField("lon"))
+      .withColumn("lat", a.getField("lat"))
+      .withColumn("anchor_h", a.getField("h"))
+      .withColumn("anchor_epoch", a.getField("epoch"))
+  }
+
+  /** spans → struct(lon, lat, h, epoch). The spans type and the ordinals
+    * of its `kind` and `text` fields come from the docs schema and ride as
+    * plan-time literals, so any span struct carrying those two string
+    * fields works. */
+  private def anchor(docs: DataFrame): Column = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    val spansType = docs.schema("spans").dataType
+    val span = spansType match {
+      case ArrayType(st: StructType, _) => st
+      case other => throw new IllegalArgumentException(
+        s"withAnchor: spans must be array<struct<kind, text, ...>>, got ${other.simpleString}")
+    }
+    def stringField(name: String): Int = {
+      val i = span.fieldIndex(name)
+      require(span(i).dataType == StringType,
+        s"withAnchor: span field '$name' must be a string, got ${span(i).dataType.simpleString}")
+      i
+    }
+    KernelCall.column("anchor", AnchorKernels, "anchor", AnchorKernels.resultType,
+      Seq(col("spans")), Seq(spansType), returnNullable = true,
+      after = Seq(Literal(span.length), Literal(stringField("kind")),
+        Literal(stringField("text")), KernelCall.obj(AnchorKernels.ScratchRef())))
   }
 
   /** The per-row span-sequence invariant checksum (kind, text, media_ref,
@@ -132,5 +155,107 @@ object DocGenKernels {
       i += 1
     }
     new GenericArrayData(out)
+  }
+}
+
+/** Static kernel behind DocsTable.withAnchor: one walk over a doc's spans
+  * to the first non-null element whose kind is "geo", then up to four
+  * space-separated tokens of its text, read straight from the UTF8String
+  * bytes as `split(text, ' ')` would cut them. */
+object AnchorKernels {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow, SpecificInternalRow}
+  import org.apache.spark.sql.catalyst.util.ArrayData
+  import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+  import org.apache.spark.unsafe.types.UTF8String
+
+  val resultType: StructType = StructType(
+    Seq("lon", "lat", "h", "epoch").map(StructField(_, DoubleType)))
+
+  final class Scratch {
+    val row = new SpecificInternalRow(resultType.map(_.dataType))
+    /** Spark's own try_cast(token as double), for tokens off the fast path */
+    val token = new GenericInternalRow(1)
+    val cast = Cast(BoundReference(0, StringType, nullable = true), DoubleType,
+      evalMode = EvalMode.TRY)
+  }
+  /** equal to every other handle, like ProjKernels.ScratchRef */
+  final case class ScratchRef() {
+    @transient lazy val tl: ThreadLocal[Scratch] =
+      ThreadLocal.withInitial[Scratch](() => new Scratch)
+  }
+
+  private val Geo = UTF8String.fromString("geo")
+  /** 10^k for k <= 22: every one is an exact double */
+  private val Pow10 = Array.iterate(1.0, 23)(_ * 10)
+
+  /** Null when there is no geo span or the first one has null text. */
+  def anchor(spans: ArrayData, numFields: Int, kindOrd: Int, textOrd: Int,
+             scratch: ScratchRef): InternalRow = {
+    val n = spans.numElements()
+    var i = 0
+    while (i < n) {
+      if (!spans.isNullAt(i)) {
+        val span = spans.getStruct(i, numFields)
+        if (!span.isNullAt(kindOrd) && span.getUTF8String(kindOrd) == Geo)
+          return if (span.isNullAt(textOrd)) null
+          else parse(span.getUTF8String(textOrd), scratch.tl.get())
+      }
+      i += 1
+    }
+    null
+  }
+
+  private def parse(text: UTF8String, s: Scratch): InternalRow = {
+    val r = s.row
+    val n = text.numBytes()
+    var start = 0
+    var f = 0
+    while (f < 4) {
+      if (start > n) r.setNullAt(f) // fewer than f + 1 tokens
+      else {
+        var end = start
+        while (end < n && text.getByte(end) != ' ') end += 1
+        token(text, start, end, r, f, s)
+        start = end + 1
+      }
+      f += 1
+    }
+    r
+  }
+
+  /** Field f = bytes [from, to) of text as a double. A plain decimal
+    * [+-]digits[.digits] with at most 15 significant and 22 fraction digits
+    * is exact by Clinger's rule: its digits form an exact double, so does
+    * 10^k, and one IEEE division rounds correctly. Any other token goes to
+    * Spark's try_cast (null when it does not parse). */
+  private def token(text: UTF8String, from: Int, to: Int, r: InternalRow, f: Int,
+                    s: Scratch): Unit = {
+    var i = from
+    val neg = i < to && text.getByte(i) == '-'
+    if (i < to && (neg || text.getByte(i) == '+')) i += 1
+    var m = 0L; var sig = 0; var digits = 0; var frac = 0
+    var dot = false; var plain = true
+    while (plain && i < to) {
+      val b = text.getByte(i)
+      if (b >= '0' && b <= '9') {
+        if (m != 0 || b != '0') sig += 1
+        m = m * 10 + (b - '0'); digits += 1
+        if (dot) frac += 1
+      } else if (b == '.' && !dot) dot = true
+      else plain = false
+      i += 1
+    }
+    if (plain && digits > 0 && sig <= 15 && frac <= 22) {
+      val v = m.toDouble / Pow10(frac)
+      r.setDouble(f, if (neg) -v else v)
+    } else {
+      s.token.update(0,
+        UTF8String.fromAddress(text.getBaseObject, text.getBaseOffset + from, to - from))
+      s.cast.eval(s.token) match {
+        case d: java.lang.Double => r.setDouble(f, d)
+        case _ => r.setNullAt(f)
+      }
+    }
   }
 }

@@ -26,8 +26,11 @@ object SpatialJoins {
     * extent vs the cell pitch at `level` so interior cells can't fall
     * between samples (a fixed grid silently under-covered large boxes). */
   def coverBBox(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
-                level: Int): Seq[Long] = {
-    val cells = collection.mutable.LinkedHashSet[Long]()
+                level: Int): Seq[Long] =
+    coverBBox(minLon, minLat, maxLon, maxLat, level, new CoverCells(level))
+
+  private[spark] def coverBBox(minLon: Double, minLat: Double, maxLon: Double,
+                               maxLat: Double, level: Int, cells: CoverCells): Seq[Long] = {
     // conservative min cell extent in degrees at `level`: a face spans 90°
     // over 2^level cells; the uv->st quadratic transform shrinks edge cells
     // by up to ~1.7x, and high-latitude lon extent shrinks by cos(lat)
@@ -53,14 +56,26 @@ object SpatialJoins {
       while (j <= stepsJ) {
         val lon = minLon + (maxLon - minLon) * i / stepsI
         val lat = minLat + (maxLat - minLat) * j / stepsJ
-        val c = S2CellId.cellId(lon, lat, level)
-        cells += c
-        cells ++= S2CellId.allNeighbors(c)
+        cells.sample(lon, lat)
         j += 1
       }
       i += 1
     }
     cells.toSeq
+  }
+
+  /** A cover in sample order: each sample's cell, then its neighbor ring.
+    * Dense sampling hits the same cell many times; its ring is expanded the
+    * first time only, which inserts exactly what re-expanding would. */
+  private[spark] class CoverCells(level: Int) {
+    protected val cells = collection.mutable.LinkedHashSet[Long]()
+    private val centers = collection.mutable.HashSet[Long]()
+    def sample(lon: Double, lat: Double): Unit = {
+      val c = S2CellId.cellId(lon, lat, level)
+      cells += c
+      if (centers.add(c)) cells ++= S2CellId.allNeighbors(c)
+    }
+    def toSeq: Seq[Long] = cells.toSeq
   }
 
   /** Interior-aware S2 cover of a polygon RING at `level`: a lon/lat
@@ -72,7 +87,11 @@ object SpatialJoins {
     * vertex in rect, rect corner in ring, ring edge crosses rect) holds,
     * so every polygon-intersecting cell is sampled; the PIP join's exact
     * ray-cast verify keeps correctness independent of cover tightness. */
-  def coverRing(lons: Array[Double], lats: Array[Double], level: Int): Seq[Long] = {
+  def coverRing(lons: Array[Double], lats: Array[Double], level: Int): Seq[Long] =
+    coverRing(lons, lats, level, new CoverCells(level))
+
+  private[spark] def coverRing(lons: Array[Double], lats: Array[Double], level: Int,
+                               cells: CoverCells): Seq[Long] = {
     val n = lons.length
     var minLon = Double.MaxValue; var maxLon = Double.MinValue
     var minLat = Double.MaxValue; var maxLat = Double.MinValue
@@ -98,7 +117,7 @@ object SpatialJoins {
     // fast path: small boxes gain nothing from pruning
     if (stepsNeeded(maxLon - minLon, pitchLon).toLong *
         stepsNeeded(maxLat - minLat, pitchLat) <= 1024)
-      return coverBBox(minLon, minLat, maxLon, maxLat, level)
+      return coverBBox(minLon, minLat, maxLon, maxLat, level, cells)
 
     def inRing(lon: Double, lat: Double): Boolean = {
       var inside = false
@@ -149,7 +168,6 @@ object SpatialJoins {
       }
       false
     }
-    val cells = collection.mutable.LinkedHashSet[Long]()
     def emit(rx0: Double, ry0: Double, rx1: Double, ry1: Double): Unit = {
       val si = stepsNeeded(rx1 - rx0, pitchLon)
       val sj = stepsNeeded(ry1 - ry0, pitchLat)
@@ -157,10 +175,7 @@ object SpatialJoins {
       while (a <= si) {
         var b = 0
         while (b <= sj) {
-          val c = S2CellId.cellId(rx0 + (rx1 - rx0) * a / si,
-            ry0 + (ry1 - ry0) * b / sj, level)
-          cells += c
-          cells ++= S2CellId.allNeighbors(c)
+          cells.sample(rx0 + (rx1 - rx0) * a / si, ry0 + (ry1 - ry0) * b / sj)
           b += 1
         }
         a += 1

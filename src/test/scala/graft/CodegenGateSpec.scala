@@ -2,11 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{PythonUDF, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenFallback}
 import org.apache.spark.sql.catalyst.plans.logical.{ObjectConsumer, ObjectProducer}
-import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{ProjErr, ProjError}
+import graft.spark.DocsTable
 
 /** Codegen gate over every driver query and the flagship entry: each runs
   * in a session where whole-stage codegen may not fall back to the
@@ -89,6 +92,47 @@ class CodegenGateSpec extends AnyFunSuite {
             case root => fail(s"$name failed on $root", e)
           }
       }
+    }
+
+  /** CodegenFallback expressions held by executed-plan operators that run
+    * outside whole-stage codegen: Spark keeps any operator holding one out
+    * of its codegen stage, so each is a per-row interpreter island. */
+  private def interpretedFallbacks(p: SparkPlan, inStage: Boolean = false): Seq[String] =
+    p match {
+      case w: WholeStageCodegenExec => interpretedFallbacks(w.child, inStage = true)
+      case a: InputAdapter => interpretedFallbacks(a.child)
+      case _ =>
+        val here = if (inStage) Nil else p.expressions.flatMap(_.collect {
+          case e: CodegenFallback => s"${p.nodeName}: ${e.prettyName}"
+        })
+        here ++ p.children.flatMap(interpretedFallbacks(_, inStage))
+    }
+
+  // HotSpot does not JIT-compile a method of more bytecode than this
+  // (DontCompileHugeMethods, on by default), so a larger generated method
+  // runs interpreted however hot it gets
+  private val hugeMethodLimit = 8000
+
+  /** the north-star pass and its anchor step on their own */
+  private def northStar(name: String): DataFrame =
+    if (name == "anchor")
+      DocsTable.withAnchor(DocsTable.docs(spark, 2000)).where(col("lon").isNotNull)
+    else q(name)
+
+  for (name <- Seq("anchor", "entry"))
+    test(s"$name: no CodegenFallback outside a codegen stage; every stage method " +
+        s"under $hugeMethodLimit bytes") {
+      val executed = northStar(name).queryExecution.executedPlan
+      val islands = interpretedFallbacks(executed).distinct
+      assert(islands.isEmpty, s"$name: interpreted operators ${islands.mkString(", ")}\n$executed")
+      val stages = executed.collect { case w: WholeStageCodegenExec => w }
+      assert(stages.nonEmpty, s"$name: no whole-stage codegen span\n$executed")
+      val sizes = stages.map { w =>
+        val size = CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize
+        assert(size < hugeMethodLimit, s"$name: stage ${w.codegenStageId} has a $size-byte method")
+        size
+      }
+      info(s"${stages.size} codegen stages, largest generated method ${sizes.max} bytes")
     }
 
   /** the plan shape a query must keep, besides an active whole-stage

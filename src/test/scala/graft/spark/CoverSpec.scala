@@ -67,6 +67,35 @@ class CoverSpec extends AnyFunSuite {
       s"expected < 70% of bbox cover, got $interior vs $bbox")
   }
 
+  /** the plain loop: every sample re-expands its neighbor ring */
+  private class PlainCover(level: Int) extends SpatialJoins.CoverCells(level) {
+    override def sample(lon: Double, lat: Double): Unit = {
+      val c = graft.index.S2CellId.cellId(lon, lat, level)
+      cells += c
+      cells ++= graft.index.S2CellId.allNeighbors(c)
+    }
+  }
+
+  test("covers expand each cell's ring once and equal the plain loop, in order") {
+    // quadtree path: the concave polygon
+    assert(SpatialJoins.coverRing(lons, lats, level) ==
+      SpatialJoins.coverRing(lons, lats, level, new PlainCover(level)))
+    // bbox path: a direct box; small polygons take either path
+    assert(SpatialJoins.coverBBox(-0.3, 51.2, 0.4, 51.7, 12) ==
+      SpatialJoins.coverBBox(-0.3, 51.2, 0.4, 51.7, 12, new PlainCover(12)))
+    val rnd = new scala.util.Random(201)
+    for (_ <- 0 until 50) {
+      val (cx, cy) = (rnd.nextDouble() * 300 - 150, rnd.nextDouble() * 140 - 70)
+      val k = 3 + rnd.nextInt(6)
+      val ang = (0 until k).map(i => 2 * math.Pi * i / k)
+      val r = 0.01 + rnd.nextDouble() * 0.1
+      val xs = ang.map(a => cx + r * math.cos(a)).toArray
+      val ys = ang.map(a => cy + r * math.sin(a)).toArray
+      assert(SpatialJoins.coverRing(xs, ys, 12) ==
+        SpatialJoins.coverRing(xs, ys, 12, new PlainCover(12)))
+    }
+  }
+
   test("PIP join over the concave polygon: notch points excluded, arms matched") {
     import spark.implicits._
     val ring = lons.indices.flatMap(i => Seq(lons(i), lats(i))).toArray
