@@ -463,23 +463,20 @@ object MediaCodecs {
     def value(len: Int, code: Int): Int = vals(valPtr(len) + code - minCode(len))
   }
 
+  /** Entropy-coded segment reader: unstuffs 0xFF00. Any other marker ends
+    * the segment: the reader stops on its 0xFF (`pos` stays there) and from
+    * then on reads 0 bits with `eof` set. */
   private final class BitReader(bytes: Array[Byte], var pos: Int) {
     var bitBuf = 0
     var bitCnt = 0
     var eof = false
     def nextBit(): Int = {
       if (bitCnt == 0) {
-        if (pos >= bytes.length) { eof = true; return 0 }
-        var byte0 = bytes(pos) & 0xff; pos += 1
-        if (byte0 == 0xff) {
-          val next = if (pos < bytes.length) bytes(pos) & 0xff else 0xd9
-          if (next == 0x00) pos += 1 // stuffed
-          else if (next >= 0xd0 && next <= 0xd7) { // restart marker
-            pos += 1
-            byte0 = if (pos < bytes.length) { val v = bytes(pos) & 0xff; pos += 1; v }
-              else { eof = true; 0 }
-          } else { eof = true; return 0 } // EOI or other marker
-        }
+        if (eof || pos >= bytes.length) { eof = true; return 0 }
+        val byte0 = bytes(pos) & 0xff
+        if (byte0 != 0xff) pos += 1
+        else if (pos + 1 < bytes.length && bytes(pos + 1) == 0) pos += 2 // stuffed
+        else { eof = true; return 0 }
         bitBuf = byte0; bitCnt = 8
       }
       bitCnt -= 1
@@ -499,200 +496,14 @@ object MediaCodecs {
       }
       if (l > 16 || eof) -1 else t.value(l, code)
     }
-  }
-
-  /** full baseline JFIF decode: Huffman entropy decode (DC prediction, AC
-    * runs, EOB/ZRL), dequantization, zigzag, IDCT, level shift; grayscale
-    * returns luma bytes, 3-component YCbCr converts to interleaved RGB
-    * with box upsampling of subsampled chroma. None on malformed input. */
-  def decodeJpegPixels(bytes: Array[Byte]): Option[Array[Byte]] = {
-    if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff ||
-      (bytes(1) & 0xff) != 0xd8) return None
-    val quant = Array.fill(4)(new Array[Int](64))
-    val dcTabs = new Array[HuffTable](4)
-    val acTabs = new Array[HuffTable](4)
-    var width = 0; var height = 0; var nComp = 0
-    // per component: id, h, v, quant table; then at SOS: dc/ac table ids
-    val compH = new Array[Int](4); val compV = new Array[Int](4)
-    val compQ = new Array[Int](4)
-    val compDc = new Array[Int](4); val compAc = new Array[Int](4)
-    var pos = 2
-    var scanStart = -1
-    while (scanStart < 0 && pos + 4 <= bytes.length) {
-      if ((bytes(pos) & 0xff) != 0xff) return None
-      val marker = bytes(pos + 1) & 0xff
-      val len = ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff)
-      if (len < 2) return None
-      if (pos + 2 + len > bytes.length) return None // truncated segment
-      marker match {
-        case 0xDB => // DQT
-          var p = pos + 4
-          while (p < pos + 2 + len) {
-            val pq = (bytes(p) & 0xf0) >> 4; val tq = bytes(p) & 0x0f
-            p += 1
-            var i = 0
-            while (i < 64) {
-              quant(tq)(i) =
-                if (pq == 0) bytes(p + i) & 0xff
-                else ((bytes(p + 2 * i) & 0xff) << 8) | (bytes(p + 2 * i + 1) & 0xff)
-              i += 1
-            }
-            p += (if (pq == 0) 64 else 128)
-          }
-        case 0xC0 | 0xC1 => // SOF0/1 (baseline)
-          height = ((bytes(pos + 5) & 0xff) << 8) | (bytes(pos + 6) & 0xff)
-          width = ((bytes(pos + 7) & 0xff) << 8) | (bytes(pos + 8) & 0xff)
-          nComp = bytes(pos + 9) & 0xff
-          if (nComp != 1 && nComp != 3) return None
-          var c = 0
-          while (c < nComp) {
-            val base = pos + 10 + 3 * c
-            compH(c) = (bytes(base + 1) & 0xf0) >> 4
-            compV(c) = bytes(base + 1) & 0x0f
-            compQ(c) = bytes(base + 2) & 0x0f
-            c += 1
-          }
-        case 0xC2 => return decodeJpegProgressivePixels(bytes) // §G path
-        case 0xC4 => // DHT
-          var p = pos + 4
-          while (p < pos + 2 + len) {
-            val tc = (bytes(p) & 0xf0) >> 4; val th = bytes(p) & 0x0f
-            val bits = new Array[Int](16)
-            var total = 0
-            var i = 0
-            while (i < 16) { bits(i) = bytes(p + 1 + i) & 0xff; total += bits(i); i += 1 }
-            val vals = new Array[Int](total)
-            i = 0
-            while (i < total) { vals(i) = bytes(p + 17 + i) & 0xff; i += 1 }
-            val t = new HuffTable(bits, vals)
-            if (tc == 0) dcTabs(th) = t else acTabs(th) = t
-            p += 17 + total
-          }
-        case 0xDA => // SOS
-          val ns = bytes(pos + 4) & 0xff
-          if (ns != nComp) return None
-          var c = 0
-          while (c < ns) {
-            compDc(c) = (bytes(pos + 6 + 2 * c) & 0xf0) >> 4
-            compAc(c) = bytes(pos + 6 + 2 * c) & 0x0f
-            c += 1
-          }
-          scanStart = pos + 2 + len
-        case 0xD9 => return None
-        case _ => ()
-      }
-      if (scanStart < 0) pos += 2 + len
-    }
-    if (scanStart < 0 || width == 0 || height == 0) return None
-
-    val hMax = (0 until nComp).map(compH).max
-    val vMax = (0 until nComp).map(compV).max
-    val mcuW = 8 * hMax; val mcuH = 8 * vMax
-    val mcusX = (width + mcuW - 1) / mcuW
-    val mcusY = (height + mcuH - 1) / mcuH
-    // per-component planes at full MCU-grid resolution
-    val planeW = (0 until nComp).map(c => mcusX * compH(c) * 8).toArray
-    val planeH = (0 until nComp).map(c => mcusY * compV(c) * 8).toArray
-    val planes = (0 until nComp).map(c =>
-      new Array[Byte](planeW(c) * planeH(c))).toArray
-    val preds = new Array[Int](nComp)
-    val reader = new BitReader(bytes, scanStart)
-    val coef = new Array[Int](64)
-    val tmp = new Array[Double](64)
-
-    val work = new Array[Double](64)
-    def idctInto(plane: Array[Byte], pw: Int, ox: Int, oy: Int, q: Array[Int]): Unit = {
-      var i = 0
-      while (i < 64) { tmp(i) = coef(i).toDouble * q(i); i += 1 }
-      idct8x8Into(tmp, work, plane, pw, ox, oy)
-    }
-
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        var c = 0
-        while (c < nComp) {
-          val dcT = dcTabs(compDc(c)); val acT = acTabs(compAc(c))
-          if (dcT == null || acT == null) return None
-          var by = 0
-          while (by < compV(c)) {
-            var bx = 0
-            while (bx < compH(c)) {
-              java.util.Arrays.fill(coef, 0)
-              val cat = reader.decode(dcT)
-              if (cat < 0) return None
-              var diff = if (cat == 0) 0 else reader.bits(cat)
-              if (cat > 0 && diff < (1 << (cat - 1))) diff -= (1 << cat) - 1
-              preds(c) += diff
-              coef(0) = preds(c)
-              var k = 1
-              var eob = false
-              while (k < 64 && !eob) {
-                val rs = reader.decode(acT)
-                if (rs < 0) return None
-                val run = rs >> 4; val size = rs & 0x0f
-                if (size == 0) {
-                  if (run == 15) k += 16 // ZRL
-                  else eob = true
-                } else {
-                  k += run
-                  if (k > 63) return None
-                  var v = reader.bits(size)
-                  if (v < (1 << (size - 1))) v -= (1 << size) - 1
-                  coef(zigzag(k)) = v
-                  k += 1
-                }
-              }
-              idctInto(planes(c), planeW(c),
-                (mx * compH(c) + bx) * 8, (my * compV(c) + by) * 8,
-                quant(compQ(c)))
-              bx += 1
-            }
-            by += 1
-          }
-          c += 1
-        }
-        mx += 1
-      }
-      my += 1
-    }
-
-    if (nComp == 1) {
-      // crop to the declared dimensions
-      val outPx = new Array[Byte](width * height)
-      var y = 0
-      while (y < height) {
-        System.arraycopy(planes(0), y * planeW(0), outPx, y * width, width)
-        y += 1
-      }
-      Some(outPx)
-    } else {
-      val outPx = new Array[Byte](width * height * 3)
-      var y = 0
-      while (y < height) {
-        var x = 0
-        while (x < width) {
-          def sample(c: Int): Int = {
-            val sx = x * compH(c) / hMax; val sy = y * compV(c) / vMax
-            planes(c)(sy * planeW(c) + sx) & 0xff
-          }
-          val yy = sample(0).toDouble
-          val cb = sample(1) - 128.0
-          val cr = sample(2) - 128.0
-          def clamp(d: Double): Byte = {
-            val v = math.round(d).toInt
-            (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-          }
-          val o = (y * width + x) * 3
-          outPx(o) = clamp(yy + 1.402 * cr)
-          outPx(o + 1) = clamp(yy - 0.344136 * cb - 0.714136 * cr)
-          outPx(o + 2) = clamp(yy + 1.772 * cb)
-          x += 1
-        }
-        y += 1
-      }
-      Some(outPx)
+    /** end of a restart interval (T.81 F.2.2.5): drop the fill bits and
+      * consume marker `rst`. False when the interval read past its end or
+      * the next marker is not `rst`. */
+    def restart(rst: Int): Boolean = {
+      val ok = !eof && pos + 1 < bytes.length &&
+        (bytes(pos) & 0xff) == 0xff && (bytes(pos + 1) & 0xff) == rst
+      bitCnt = 0; pos += 2
+      ok
     }
   }
 
@@ -917,19 +728,28 @@ object MediaCodecs {
     out.toByteArray
   }
 
-  /** Progressive (SOF2) decode: accumulates per-block coefficients across
-    * DC/AC first and refinement scans (§G.2: DC successive approximation,
-    * AC spectral selection with EOBRUN, the refinement correction-bit
-    * protocol), then dequantizes and runs the shared IDCT. Interleaved
-    * multi-component DC scans and single-component AC scans per the spec;
-    * grayscale returns luma bytes, 3-component converts YCbCr like the
-    * baseline path. */
-  def decodeJpegProgressivePixels(bytes: Array[Byte]): Option[Array[Byte]] = {
+  /** ITU T.81 Huffman decode of sequential (SOF0/1) and progressive (SOF2)
+    * frames. Every scan fills a per-block coefficient buffer. A sequential
+    * frame is the one-scan case Ss=0, Se=63, Ah=Al=0, whose block unit is a
+    * DC unit then an AC unit; a progressive scan runs one §G unit per block
+    * (DC first/refine with successive approximation, AC first with EOBRUN,
+    * AC refinement with the correction-bit protocol). Interleaved scans walk
+    * MCUs, single-component scans the component's nominal block grid. A DRI
+    * restart interval resets the DC predictors and EOBRUN at each RSTn.
+    * After the last scan every block is dequantized and inverse-transformed
+    * once. Grayscale returns luma bytes; 3-component YCbCr converts to
+    * interleaved RGB with box upsampling of subsampled chroma. None on
+    * malformed input. */
+  def decodeJpegPixels(bytes: Array[Byte]): Option[Array[Byte]] = {
     if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff ||
       (bytes(1) & 0xff) != 0xd8) return None
+    def u8(p: Int): Int = bytes(p) & 0xff
+    def u16(p: Int): Int = (u8(p) << 8) | u8(p + 1)
     val quant = Array.fill(4)(new Array[Int](64))
     val dcTabs = new Array[HuffTable](4)
     val acTabs = new Array[HuffTable](4)
+    var progressive = false
+    var restartInterval = 0
     var width = 0; var height = 0; var nComp = 0
     val compId = new Array[Int](4)
     val compH = new Array[Int](4); val compV = new Array[Int](4)
@@ -941,45 +761,209 @@ object MediaCodecs {
     var bhN: Array[Int] = null
     var coefs: Array[Array[Int]] = null
     val preds = new Array[Int](4)
+    var scanned = false
+
+    /** one scan into `coefs`; false on malformed entropy data. */
+    def decodeScan(reader: BitReader, ns: Int, scanC: Array[Int],
+                   dcT: Array[HuffTable], acT: Array[HuffTable],
+                   ss: Int, se: Int, ah: Int, al: Int): Boolean = {
+      var eobrun = 0
+      java.util.Arrays.fill(preds, 0)
+
+      def dcUnit(si: Int, blk: Int): Boolean = {
+        val cf = coefs(scanC(si))
+        val base = blk * 64
+        if (ah == 0) {
+          val cat = reader.decode(dcT(si))
+          if (cat < 0) return false
+          var diff = if (cat == 0) 0 else reader.bits(cat)
+          if (cat > 0 && diff < (1 << (cat - 1))) diff -= (1 << cat) - 1
+          preds(si) += diff
+          cf(base) = preds(si) << al
+        } else if (reader.bits(1) != 0) cf(base) |= (1 << al)
+        true
+      }
+
+      def acFirstUnit(si: Int, blk: Int): Boolean = {
+        if (eobrun > 0) { eobrun -= 1; return true }
+        val cf = coefs(scanC(si))
+        val base = blk * 64
+        var k = math.max(ss, 1)
+        while (k <= se) {
+          val rs = reader.decode(acT(si))
+          if (rs < 0) return false
+          val r = rs >> 4; val sz = rs & 0x0f
+          if (sz == 0) {
+            if (r == 15) k += 16
+            else {
+              eobrun = (1 << r) - 1
+              if (r > 0) eobrun += reader.bits(r)
+              k = se + 1
+            }
+          } else {
+            k += r
+            if (k > se) return false
+            var v = reader.bits(sz)
+            if (v < (1 << (sz - 1))) v -= (1 << sz) - 1
+            cf(base + zigzag(k)) = v << al
+            k += 1
+          }
+        }
+        true
+      }
+
+      def acRefineUnit(si: Int, blk: Int): Boolean = {
+        val cf = coefs(scanC(si))
+        val base = blk * 64
+        val p1 = 1 << al; val m1 = -1 << al
+        var k = ss
+        if (eobrun == 0) {
+          var broke = false
+          while (k <= se && !broke) {
+            val rs = reader.decode(acT(si))
+            if (rs < 0) return false
+            var r = rs >> 4; val sz = rs & 0x0f
+            var newVal = 0
+            if (sz != 0) {
+              if (sz != 1) return false // §G.1.2.3: refinement codes s=1 only
+              newVal = if (reader.bits(1) != 0) p1 else m1
+            } else if (r != 15) {
+              eobrun = (1 << r)
+              if (r > 0) eobrun += reader.bits(r)
+              broke = true
+            }
+            if (!broke) {
+              var advancing = true
+              while (k <= se && advancing) {
+                val z = base + zigzag(k)
+                if (cf(z) != 0) {
+                  if (reader.bits(1) != 0 && (cf(z) & p1) == 0)
+                    cf(z) += (if (cf(z) >= 0) p1 else m1)
+                  k += 1
+                } else {
+                  r -= 1
+                  if (r < 0) advancing = false else k += 1
+                }
+              }
+              if (newVal != 0 && k <= se) cf(base + zigzag(k)) = newVal
+              k += 1
+            }
+          }
+        }
+        if (eobrun > 0) {
+          while (k <= se) {
+            val z = base + zigzag(k)
+            if (cf(z) != 0) {
+              if (reader.bits(1) != 0 && (cf(z) & p1) == 0)
+                cf(z) += (if (cf(z) >= 0) p1 else m1)
+            }
+            k += 1
+          }
+          eobrun -= 1
+        }
+        true
+      }
+
+      def unit(si: Int, blk: Int): Boolean =
+        if (!progressive) dcUnit(si, blk) && acFirstUnit(si, blk)
+        else if (ss == 0) dcUnit(si, blk)
+        else if (ah == 0) acFirstUnit(si, blk)
+        else acRefineUnit(si, blk)
+
+      // restart intervals count MCUs; a single-component scan's MCU is a block
+      var mcu = 0
+      def restartIfDue(): Boolean = {
+        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+          if (!reader.restart(0xD0 + ((mcu / restartInterval - 1) & 7))) return false
+          java.util.Arrays.fill(preds, 0)
+          eobrun = 0
+        }
+        mcu += 1
+        true
+      }
+
+      if (ns == 1) {
+        val c = scanC(0)
+        var by = 0
+        while (by < bhN(c)) {
+          var bx = 0
+          while (bx < bwN(c)) {
+            if (!restartIfDue() || !unit(0, by * bw(c) + bx)) return false
+            bx += 1
+          }
+          by += 1
+        }
+      } else {
+        var my = 0
+        while (my < mcusY) {
+          var mx = 0
+          while (mx < mcusX) {
+            if (!restartIfDue()) return false
+            var si = 0
+            while (si < ns) {
+              val c = scanC(si)
+              var v = 0
+              while (v < compV(c)) {
+                var h = 0
+                while (h < compH(c)) {
+                  if (!unit(si, (my * compV(c) + v) * bw(c) + mx * compH(c) + h)) return false
+                  h += 1
+                }
+                v += 1
+              }
+              si += 1
+            }
+            mx += 1
+          }
+          my += 1
+        }
+      }
+      !reader.eof
+    }
 
     var pos = 2
     var sawEoi = false
     while (!sawEoi && pos + 2 <= bytes.length) {
-      if ((bytes(pos) & 0xff) != 0xff) return None
-      val marker = bytes(pos + 1) & 0xff
+      if (u8(pos) != 0xff) return None
+      val marker = u8(pos + 1)
       if (marker == 0xD9) sawEoi = true
+      else if (marker >= 0xD0 && marker <= 0xD7) return None // RSTn outside a scan
       else {
         if (pos + 4 > bytes.length) return None
-        val len = ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff)
+        val len = u16(pos + 2)
         if (len < 2) return None
-        if (pos + 2 + len > bytes.length) return None // truncated segment
+        val end = pos + 2 + len
+        if (end > bytes.length) return None // truncated segment
         marker match {
-          case 0xDB =>
+          case 0xDB => // DQT
             var p = pos + 4
-            while (p < pos + 2 + len) {
-              val pq = (bytes(p) & 0xf0) >> 4; val tq = bytes(p) & 0x0f
+            while (p < end) {
+              val pq = u8(p) >> 4; val tq = u8(p) & 0x0f
+              if (pq > 1 || tq > 3 || p + 1 + 64 * (pq + 1) > end) return None
               p += 1
               var i = 0
               while (i < 64) {
-                quant(tq)(i) =
-                  if (pq == 0) bytes(p + i) & 0xff
-                  else ((bytes(p + 2 * i) & 0xff) << 8) | (bytes(p + 2 * i + 1) & 0xff)
+                quant(tq)(i) = if (pq == 0) u8(p + i) else u16(p + 2 * i)
                 i += 1
               }
-              p += (if (pq == 0) 64 else 128)
+              p += 64 * (pq + 1)
             }
-          case 0xC2 =>
-            height = ((bytes(pos + 5) & 0xff) << 8) | (bytes(pos + 6) & 0xff)
-            width = ((bytes(pos + 7) & 0xff) << 8) | (bytes(pos + 8) & 0xff)
-            nComp = bytes(pos + 9) & 0xff
-            if (nComp != 1 && nComp != 3) return None
+          case 0xC0 | 0xC1 | 0xC2 => // SOF0/1 sequential, SOF2 progressive
+            if (coefs != null || len < 8) return None // one frame per image
+            progressive = marker == 0xC2
+            height = u16(pos + 5); width = u16(pos + 7)
+            nComp = u8(pos + 9)
+            if ((nComp != 1 && nComp != 3) || len < 8 + 3 * nComp ||
+              width == 0 || height == 0) return None
             var c = 0
             while (c < nComp) {
               val base = pos + 10 + 3 * c
-              compId(c) = bytes(base) & 0xff
-              compH(c) = (bytes(base + 1) & 0xf0) >> 4
-              compV(c) = bytes(base + 1) & 0x0f
-              compQ(c) = bytes(base + 2) & 0x0f
+              compId(c) = u8(base)
+              compH(c) = u8(base + 1) >> 4
+              compV(c) = u8(base + 1) & 0x0f
+              compQ(c) = u8(base + 2)
+              if (compH(c) < 1 || compH(c) > 4 || compV(c) < 1 || compV(c) > 4 ||
+                compQ(c) > 3) return None
               c += 1
             }
             hMax = (0 until nComp).map(compH).max
@@ -994,221 +978,69 @@ object MediaCodecs {
             bhN = (0 until nComp).map { c0 =>
               ((height * compV(c0) + vMax - 1) / vMax + 7) / 8
             }.toArray
+            // every buffer must fit a JVM array
+            if ((0 until nComp).exists(c0 => bw(c0).toLong * bhh(c0) * 64 > Int.MaxValue) ||
+              width.toLong * height * nComp > Int.MaxValue) return None
             coefs = (0 until nComp).map(c0 =>
               new Array[Int](bw(c0) * bhh(c0) * 64)).toArray
-          case 0xC0 | 0xC1 => return None // baseline frame: wrong path
-          case 0xC4 =>
+          case 0xC4 => // DHT
             var p = pos + 4
-            while (p < pos + 2 + len) {
-              val tc = (bytes(p) & 0xf0) >> 4; val th = bytes(p) & 0x0f
+            while (p < end) {
+              val tc = u8(p) >> 4; val th = u8(p) & 0x0f
+              if (tc > 1 || th > 3 || p + 17 > end) return None
               val bits = new Array[Int](16)
               var total = 0
               var i = 0
-              while (i < 16) { bits(i) = bytes(p + 1 + i) & 0xff; total += bits(i); i += 1 }
+              while (i < 16) { bits(i) = u8(p + 1 + i); total += bits(i); i += 1 }
+              if (p + 17 + total > end) return None // values run past the segment
               val vals = new Array[Int](total)
               i = 0
-              while (i < total) { vals(i) = bytes(p + 17 + i) & 0xff; i += 1 }
+              while (i < total) { vals(i) = u8(p + 17 + i); i += 1 }
               val t = new HuffTable(bits, vals)
               if (tc == 0) dcTabs(th) = t else acTabs(th) = t
               p += 17 + total
             }
-          case 0xDA =>
-            if (coefs == null) return None
-            val ns = bytes(pos + 4) & 0xff
+          case 0xDD => // DRI
+            if (len < 4) return None
+            restartInterval = u16(pos + 4)
+          case 0xDA => // SOS
+            val ns = if (coefs != null && len > 2) u8(pos + 4) else 0
+            if (ns < 1 || ns > nComp || len < 6 + 2 * ns) return None
             val scanC = new Array[Int](ns)
-            val scanDc = new Array[Int](ns); val scanAc = new Array[Int](ns)
+            val scanDc = new Array[HuffTable](ns); val scanAc = new Array[HuffTable](ns)
             var i = 0
             while (i < ns) {
-              val cid = bytes(pos + 5 + 2 * i) & 0xff
+              val cid = u8(pos + 5 + 2 * i)
               var c = -1
               var j = 0
               while (j < nComp) { if (compId(j) == cid) c = j; j += 1 }
-              if (c < 0) return None
-              scanC(i) = c
-              scanDc(i) = (bytes(pos + 6 + 2 * i) & 0xf0) >> 4
-              scanAc(i) = bytes(pos + 6 + 2 * i) & 0x0f
+              val td = u8(pos + 6 + 2 * i) >> 4; val ta = u8(pos + 6 + 2 * i) & 0x0f
+              if (c < 0 || td > 3 || ta > 3) return None
+              scanC(i) = c; scanDc(i) = dcTabs(td); scanAc(i) = acTabs(ta)
               i += 1
             }
-            val ss = bytes(pos + 5 + 2 * ns) & 0xff
-            val se = bytes(pos + 6 + 2 * ns) & 0xff
-            val ah = (bytes(pos + 7 + 2 * ns) & 0xf0) >> 4
-            val al = bytes(pos + 7 + 2 * ns) & 0x0f
-            val reader = new BitReader(bytes, pos + 2 + len)
-            if (!decodeProgScan(reader, ns, scanC, scanDc, scanAc,
-              ss, se, ah, al)) return None
+            val ss = u8(pos + 5 + 2 * ns); val se = u8(pos + 6 + 2 * ns)
+            val ah = u8(pos + 7 + 2 * ns) >> 4; val al = u8(pos + 7 + 2 * ns) & 0x0f
+            val shapeOk =
+              if (progressive) ss <= se && se <= 63 && (ss > 0 || se == 0) && (ss == 0 || ns == 1)
+              else ss == 0 && se == 63 && ah == 0 && al == 0
+            if (!shapeOk) return None
+            // the tables this scan's units read must be defined
+            if ((ss == 0 && ah == 0 && scanDc.contains(null)) ||
+              (se > 0 && scanAc.contains(null))) return None
+            val reader = new BitReader(bytes, end)
+            if (!decodeScan(reader, ns, scanC, scanDc, scanAc, ss, se, ah, al)) return None
+            scanned = true
             // resynchronize on the next marker after the entropy data
             var p = reader.pos
-            while (p + 1 < bytes.length && !((bytes(p) & 0xff) == 0xff && {
-              val n = bytes(p + 1) & 0xff
-              n != 0x00 && (n < 0xd0 || n > 0xd7)
-            })) p += 1
+            while (p + 1 < bytes.length && !(u8(p) == 0xff && u8(p + 1) != 0)) p += 1
             pos = p
           case _ => ()
         }
-        if (marker != 0xDA) pos += 2 + len
-      }
-
-      def decodeProgScan(reader: BitReader, ns: Int, scanC: Array[Int],
-                         scanDc: Array[Int], scanAc: Array[Int],
-                         ss: Int, se: Int, ah: Int, al: Int): Boolean = {
-        var eobrun = 0
-        java.util.Arrays.fill(preds, 0)
-
-        def dcUnit(si: Int, blk: Int): Boolean = {
-          val c = scanC(si)
-          val base = blk * 64
-          if (ah == 0) {
-            val dcT = dcTabs(scanDc(si))
-            if (dcT == null) return false
-            val cat = reader.decode(dcT)
-            if (cat < 0) return false
-            var diff = if (cat == 0) 0 else reader.bits(cat)
-            if (cat > 0 && diff < (1 << (cat - 1))) diff -= (1 << cat) - 1
-            preds(si) += diff
-            coefs(c)(base) = preds(si) << al
-          } else {
-            if (reader.bits(1) != 0) coefs(c)(base) |= (1 << al)
-          }
-          !reader.eof || true // eof mid-stream surfaces as decode(-1) later
-        }
-
-        def acFirstUnit(c: Int, blk: Int, acT: HuffTable): Boolean = {
-          val base = blk * 64
-          if (eobrun > 0) { eobrun -= 1; return true }
-          var k = ss
-          while (k <= se) {
-            val rs = reader.decode(acT)
-            if (rs < 0) return false
-            val r = rs >> 4; val sz = rs & 0x0f
-            if (sz == 0) {
-              if (r == 15) k += 16
-              else {
-                eobrun = (1 << r) - 1
-                if (r > 0) eobrun += reader.bits(r)
-                k = se + 1
-              }
-            } else {
-              k += r
-              if (k > se) return false
-              var v = reader.bits(sz)
-              if (v < (1 << (sz - 1))) v -= (1 << sz) - 1
-              coefs(c)(base + zigzag(k)) = v << al
-              k += 1
-            }
-          }
-          true
-        }
-
-        def acRefineUnit(c: Int, blk: Int, acT: HuffTable): Boolean = {
-          val base = blk * 64
-          val p1 = 1 << al; val m1 = -1 << al
-          var k = ss
-          if (eobrun == 0) {
-            var broke = false
-            while (k <= se && !broke) {
-              val rs = reader.decode(acT)
-              if (rs < 0) return false
-              var r = rs >> 4; val sz = rs & 0x0f
-              var newVal = 0
-              if (sz != 0) {
-                if (sz != 1) return false // §G.1.2.3: refinement codes s=1 only
-                newVal = if (reader.bits(1) != 0) p1 else m1
-              } else if (r != 15) {
-                eobrun = (1 << r)
-                if (r > 0) eobrun += reader.bits(r)
-                broke = true
-              }
-              if (!broke) {
-                var advancing = true
-                while (k <= se && advancing) {
-                  val z = base + zigzag(k)
-                  if (coefs(c)(z) != 0) {
-                    if (reader.bits(1) != 0 && (coefs(c)(z) & p1) == 0)
-                      coefs(c)(z) += (if (coefs(c)(z) >= 0) p1 else m1)
-                    k += 1
-                  } else {
-                    r -= 1
-                    if (r < 0) advancing = false else k += 1
-                  }
-                }
-                if (newVal != 0 && k <= se) coefs(c)(base + zigzag(k)) = newVal
-                k += 1
-              }
-            }
-          }
-          if (eobrun > 0) {
-            while (k <= se) {
-              val z = base + zigzag(k)
-              if (coefs(c)(z) != 0) {
-                if (reader.bits(1) != 0 && (coefs(c)(z) & p1) == 0)
-                  coefs(c)(z) += (if (coefs(c)(z) >= 0) p1 else m1)
-              }
-              k += 1
-            }
-            eobrun -= 1
-          }
-          true
-        }
-
-        if (ss == 0) {
-          if (se != 0) return false // DC scans carry only coefficient 0
-          if (ns == 1) {
-            val c = scanC(0)
-            var by = 0
-            while (by < bhN(c)) {
-              var bx = 0
-              while (bx < bwN(c)) {
-                if (!dcUnit(0, by * bw(c) + bx)) return false
-                bx += 1
-              }
-              by += 1
-            }
-          } else {
-            var my = 0
-            while (my < mcusY) {
-              var mx = 0
-              while (mx < mcusX) {
-                var si = 0
-                while (si < ns) {
-                  val c = scanC(si)
-                  var v = 0
-                  while (v < compV(c)) {
-                    var h = 0
-                    while (h < compH(c)) {
-                      val blk = (my * compV(c) + v) * bw(c) + mx * compH(c) + h
-                      if (!dcUnit(si, blk)) return false
-                      h += 1
-                    }
-                    v += 1
-                  }
-                  si += 1
-                }
-                mx += 1
-              }
-              my += 1
-            }
-          }
-        } else {
-          if (ns != 1) return false // AC scans are single-component (§G.1)
-          val c = scanC(0)
-          val acT = acTabs(scanAc(0))
-          if (acT == null) return false
-          var by = 0
-          while (by < bhN(c)) {
-            var bx = 0
-            while (bx < bwN(c)) {
-              val ok = if (ah == 0) acFirstUnit(c, by * bw(c) + bx, acT)
-                else acRefineUnit(c, by * bw(c) + bx, acT)
-              if (!ok) return false
-              bx += 1
-            }
-            by += 1
-          }
-        }
-        true
+        if (marker != 0xDA) pos = end
       }
     }
-    if (coefs == null || width == 0 || height == 0) return None
+    if (!scanned) return None
 
     // all scans absorbed: dequantize + IDCT every block, then assemble
     val planeW = (0 until nComp).map(c => bw(c) * 8).toArray
@@ -1235,6 +1067,7 @@ object MediaCodecs {
     }
 
     if (nComp == 1) {
+      // crop to the declared dimensions
       val outPx = new Array[Byte](width * height)
       var y = 0
       while (y < height) {

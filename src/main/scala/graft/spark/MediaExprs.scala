@@ -60,18 +60,20 @@ object MediaKernels {
     * (n_px, px_sum, px_poly) over the recovered pixel bytes; null when the
     * payload doesn't decode. */
   def pngPixelStats(payload: Array[Byte]): InternalRow =
-    MediaCodecs.decodePngPixels(payload) match {
-      case Some(px) =>
-        var sum = 0L; var poly = 0L; var i = 0
-        while (i < px.length) {
-          val b = px(i) & 0xff
-          sum += b
-          poly = (poly + b.toLong * (i + 1)) % 1000000007L
-          i += 1
-        }
-        new GenericInternalRow(Array[Any](px.length.toLong, sum, poly))
-      case None => null
+    MediaCodecs.decodePngPixels(payload).map(byteStats).orNull
+
+  /** (n, sum, poly) over unsigned bytes, poly = sum of b * (i + 1) mod
+    * 1e9+7: the fold every pixel-stats kernel reports. */
+  private def byteStats(px: Array[Byte]): InternalRow = {
+    var sum = 0L; var poly = 0L; var i = 0
+    while (i < px.length) {
+      val b = px(i) & 0xff
+      sum += b
+      poly = (poly + b.toLong * (i + 1)) % 1000000007L
+      i += 1
     }
+    new GenericInternalRow(Array[Any](px.length.toLong, sum, poly))
+  }
 
   /** deterministic baseline JPEG for the content-deep check: dimensions
     * and DC stream derived from the seed (see MediaCodecs); null when a
@@ -85,18 +87,7 @@ object MediaKernels {
     * then fold (n_px, px_sum, px_poly); null when the payload doesn't
     * decode. */
   def jpegPixelStats(payload: Array[Byte]): InternalRow =
-    MediaCodecs.decodeJpegPixels(payload) match {
-      case Some(px) =>
-        var sum = 0L; var poly = 0L; var i = 0
-        while (i < px.length) {
-          val b = px(i) & 0xff
-          sum += b
-          poly = (poly + b.toLong * (i + 1)) % 1000000007L
-          i += 1
-        }
-        new GenericInternalRow(Array[Any](px.length.toLong, sum, poly))
-      case None => null
-    }
+    MediaCodecs.decodeJpegPixels(payload).map(byteStats).orNull
 
   /** deterministic progressive (SOF2, §G) JPEG for the content-deep
     * check: dimensions and coefficient stream derived from the seed; null
@@ -111,19 +102,22 @@ object MediaKernels {
     * px_chk weights each pixel by (1+x%8)^2 * (1+y%8)^2 — a quadratic
     * in-block weight with nonzero inner product against the (4,0)/(4,4)
     * DCT bases, so AC coefficient errors (invisible to the constant and
-    * global-linear folds) flip the hash. Null when the payload doesn't
-    * decode. */
+    * global-linear folds) flip the hash; a color pixel's bytes share its
+    * weight. Null when the payload doesn't decode. */
   def jpegPixelStatsProg(payload: Array[Byte]): InternalRow = {
-    val width = MediaCodecs.decodeJpeg(payload) match {
-      case Some(info) if info.width > 0 => info.width
+    val info = MediaCodecs.decodeJpeg(payload) match {
+      case Some(i) if i.width > 0 && i.height > 0 => i
       case _ => return null
     }
+    val width = info.width
     MediaCodecs.decodeJpegPixels(payload) match {
       case Some(px) =>
+        val channels = math.max(1L, px.length / (width.toLong * info.height)).toInt
         var sum = 0L; var poly = 0L; var chk = 0L; var i = 0
         while (i < px.length) {
           val b = px(i) & 0xff
-          val xm = (i % width) % 8; val ym = (i / width) % 8
+          val p = i / channels
+          val xm = (p % width) % 8; val ym = (p / width) % 8
           sum += b
           poly = (poly + b.toLong * (i + 1)) % 1000000007L
           chk = (chk + b.toLong * ((1 + xm) * (1 + xm) * (1 + ym) * (1 + ym))) %
@@ -188,15 +182,7 @@ object MediaKernels {
       case Some(px) if px.length == info.width * info.height =>
         val w2 = (info.width / factor).toInt; val h2 = (info.height / factor).toInt
         if (w2 == 0 || h2 == 0) return null
-        val r = resizeGray(px, info.width, info.height, w2, h2)
-        var sum = 0L; var poly = 0L; var i = 0
-        while (i < r.length) {
-          val b = r(i) & 0xff
-          sum += b
-          poly = (poly + b.toLong * (i + 1)) % 1000000007L
-          i += 1
-        }
-        new GenericInternalRow(Array[Any](r.length.toLong, sum, poly))
+        byteStats(resizeGray(px, info.width, info.height, w2, h2))
       case _ => null
     }
   }
